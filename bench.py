@@ -436,6 +436,9 @@ def main(argv: list[str] | None = None) -> None:
     # semantics are self-documenting in the artifact.
     detail_obj = dict(result)
     detail_obj["first_pass"] = first_pass
+    # Without the sf0.001 warmup dir the warmup ran at the target SF and
+    # already built its disk caches, so first_pass is not a cold reading.
+    detail_obj["warmup_at_target_sf"] = warm_dir == sf_dir
     detail_obj["cache_dirs_wiped"] = [".ivf_cache", ".index_cache"]
     detail_obj["cpus"] = cpus
     try:

@@ -273,10 +273,12 @@ def histogram_quantiles(
 
 
 def _mg_partition_gen(keys: list[str], k: int):
-    """Shared per-partition Misra-Gries generator (the
-    correctness-critical offset-reduction rule lives HERE ONLY;
-    frequent_items and partial_mg_state both consume it, so a fix to
-    the reduction cannot drift between them).
+    """Per-partition Misra-Gries generator for ``frequent_items``'s
+    sketch pass: bounded memory per partition, reduced once per Arrow
+    batch with the mergeable-summaries offset rule (subtract the
+    (k+1)-th largest count, drop non-positives). ``partial_mg_state``
+    does not use it: it counts exactly and reduces once, which needs
+    no Python worker.
 
     Emits rows ``keys... , weight, part_rows``: MG-surviving keys with
     their residual weights, plus the partition's TOTAL row count
@@ -478,39 +480,65 @@ def maintain_agg_view(
     return merged.filter(F.col("n") > 0)
 
 
-def partial_mg_state(
-    df: DataFrame, key_cols: list[str], counters: int
-) -> DataFrame:
-    """Misra-Gries summary of one dataset as a MERGEABLE state table
-    (keys..., weight), at most ``counters`` rows — the heavy-hitter
-    sibling of the HLL/histogram states above, for when the exact
-    recount pass of ``frequent_items`` isn't possible (streaming epochs
-    that never revisit the data).
+def partial_mg_state(df: DataFrame, key_cols: list[str], counters: int):
+    """EAGER Misra-Gries summary of one dataset, for streaming epochs
+    that never revisit their data (``frequent_items`` can recount
+    exactly instead). Returns ``(summary, n_rows)``: ``summary`` is a
+    pyarrow table (keys..., weight) of at most ``counters`` rows, typed
+    as Spark types map to Arrow; ``n_rows`` is the input row count.
 
-    Per-partition MG summaries (bounded memory, mapInPandas) merge via
-    counter-add, then one offset reduction — subtract the
-    (counters+1)-th largest weight from all, keep positives — which
-    preserves the mergeable-summaries guarantee: for any key,
-    true_count - weight <= (N - sum(weights)) / (counters + 1).
-    The reduction ranks the pre-reduced summary (<= counters x
-    partitions rows — bounded and tiny, so the single-partition window
-    is safe by construction, same justification as skew_report's
-    N-row window) and broadcasts the 1-row offset back.
+    One Spark action: exact per-key counts (a hash aggregate), ordered
+    by weight and limited to ``counters + 1`` rows, which plans as
+    TakeOrderedAndProject (top-k per partition, at most ``counters+1``
+    rows reach the driver). The row count rides along as an
+    observation on the same scan. The driver then applies the offset
+    rule once: subtract the (counters+1)-th largest weight, keep
+    positives. Exact counts are a valid summary with zero error, so
+    one reduction keeps the mergeable-summaries guarantee: for any key,
+    true_count - weight <= (N - sum(weights)) / (counters + 1). Ties
+    need no ordering key: a row tied with the offset reduces to 0 and
+    is dropped, so the result does not depend on which tied rows the
+    limit kept.
+
+    The summary is a state table for ``merge_mg_states`` once loaded
+    back into Spark (``spark.createDataFrame(summary)`` or a parquet
+    write and read).
     """
-    keys = list(key_cols)
-    per_part = (
-        df.select(*keys)
-        .mapInPandas(_mg_partition_gen(keys, counters), _mg_schema(df, keys))
-        .filter(F.col("weight") > 0)  # drop row-count sentinels
-        .drop("part_rows")
+    import pyarrow.compute as pc
+    from pyspark.sql import Observation
+
+    rows = Observation()
+    top = (
+        df.observe(rows, F.count(F.lit(1)).alias("n"))
+        .groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("weight"))
+        .orderBy(F.col("weight").desc())
+        .limit(counters + 1)
+        .toArrow()
     )
-    return _reduce_mg(per_part, keys, counters)
+    if top.num_rows == 0:
+        # No groups means no rows. Read no observation: Spark may plan a
+        # provably empty input without the observing node.
+        return top, 0
+    off = top["weight"][counters].as_py() if top.num_rows > counters else 0
+    top = top.slice(0, counters)
+    weight = pc.subtract(top["weight"], off)
+    summary = top.drop_columns(["weight"]).append_column("weight", weight)
+    return summary.filter(pc.greater(weight, 0)), int(rows.get["n"])
 
 
-def _reduce_mg(summary: DataFrame, keys: list[str], counters: int) -> DataFrame:
+def merge_mg_states(states: list[DataFrame], counters: int) -> DataFrame:
+    """Merge any number of MG state tables into one bounded summary;
+    associative and commutative (counter-add then offset reduction),
+    so epoch states can be folded in any order or compacted
+    hierarchically."""
     from pyspark.sql import Window
 
-    merged = summary.groupBy(*keys).agg(F.sum("weight").alias("weight"))
+    keys = [c for c in states[0].columns if c != "weight"]
+    unioned = states[0]
+    for s in states[1:]:
+        unioned = unioned.unionByName(s)
+    merged = unioned.groupBy(*keys).agg(F.sum("weight").alias("weight"))
     w = Window.orderBy(F.col("weight").desc(), *[F.col(k) for k in keys])
     ranked = merged.withColumn("__rn", F.row_number().over(w))
     off = ranked.agg(
@@ -524,15 +552,3 @@ def _reduce_mg(summary: DataFrame, keys: list[str], counters: int) -> DataFrame:
         .filter(F.col("weight") > 0)
         .drop("__rn", "__off")
     )
-
-
-def merge_mg_states(states: list[DataFrame], counters: int) -> DataFrame:
-    """Merge any number of MG state tables into one bounded summary;
-    associative and commutative (counter-add then offset reduction),
-    so epoch states can be folded in any order or compacted
-    hierarchically."""
-    keys = [c for c in states[0].columns if c != "weight"]
-    unioned = states[0]
-    for s in states[1:]:
-        unioned = unioned.unionByName(s)
-    return _reduce_mg(unioned, keys, counters)

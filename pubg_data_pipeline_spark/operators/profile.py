@@ -50,6 +50,12 @@ def profile_columns(
 
     One aggregation job regardless of column count; the wide single
     row is then unpivoted driver-free via ``stack``.
+
+    ``df`` must be a pure scan (or otherwise deterministic): with
+    ``exact_distinct`` the plan reads it twice, once for the basic
+    stats and once for the distinct counts, so a ``sample()`` or
+    ``rand()``-derived input would profile two different row sets.
+    Materialize such an input first (``ckpt.barrier``).
     """
     if not cols:
         raise ValueError("profile_columns: empty column list")

@@ -123,6 +123,11 @@ def get_spark(
         # address space only, so a generous cap is free on this box).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
+        # Reliable checkpoints (SPARK_GRAFT_CHECKPOINT_DIR) write a new
+        # directory per barrier call and per CC round; let the context
+        # cleaner delete each once its RDD is garbage-collected, or the
+        # checkpoint dir grows without bound.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

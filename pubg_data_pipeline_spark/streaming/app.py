@@ -197,7 +197,9 @@ def rollup_merge_epoch(
     spark = batch_df.sparkSession
     partial = incremental.partial_hourly_state(batch_df, ts_col, value_col)
     if os.path.isdir(state_path):
-        prev = spark.read.parquet(state_path)
+        # The stored state has the partial's schema; passing it skips
+        # the footer-reading schema-inference job on every epoch.
+        prev = spark.read.schema(partial.schema).parquet(state_path)
         merged = incremental.merge_hourly_states(prev, partial)
     else:
         merged = partial
@@ -338,14 +340,19 @@ def ingest_dedup_epoch(
     spark = batch_df.sparkSession
     batch = batch_df.withColumn("__fp", doc_fingerprint(F.col(text_col)))
     # Bare-directory guard: an empty epoch creates the directory but no
-    # data files, and schema inference on a fileless dir fails.
+    # data files; with nothing indexed there is nothing to anti-join.
     has_index = os.path.isdir(index_path) and any(
         f.endswith(".parquet")
         for _, _, files in os.walk(index_path)
         for f in files
     )
     if has_index:
-        idx = spark.read.parquet(index_path).select(F.col("fingerprint").alias("__fp"))
+        # Explicit schema: no schema-inference job per epoch.
+        idx = (
+            spark.read.schema("fingerprint string")
+            .parquet(index_path)
+            .select(F.col("fingerprint").alias("__fp"))
+        )
         batch = batch.join(idx, "__fp", "left_anti")
     keep = (
         exact_dedup(batch, ["__fp"], id_col)
@@ -841,55 +848,66 @@ def heavy_hitters_epoch(
 ) -> None:
     """One epoch of streaming heavy-hitter tracking: the micro-batch is
     reduced to a bounded Misra-Gries summary
-    (operators/incremental.py:partial_mg_state) and stored as THIS
-    EPOCH's partition of the state table; batch row counts land beside
-    it so readers can report the MG error bound. Dynamic overwrite of
-    the ``__epoch=N`` partitions makes replays idempotent (same
-    recipe as join_view_epoch). Readers merge epoch summaries on
-    demand (read_heavy_hitters); states are associative, so a
-    maintenance job may compact old epochs into one without changing
-    answers."""
-    from pyspark.sql import functions as F
+    (operators/incremental.py:partial_mg_state, one native Spark job
+    whose result of at most ``counters`` rows lands on the driver) and
+    stored as THIS EPOCH's partition of the state table; the batch row
+    total lands beside it so readers can report the MG error bound.
+
+    The driver commits both partitions itself with pyarrow: each file
+    is written into a dot-prefixed temp dir (invisible to Spark and
+    pyarrow readers) and renamed onto ``summary/__epoch=N`` and
+    ``totals/__epoch=N``, replacing a previous copy — so a replay
+    replaces exactly its own partition, which then holds one data file
+    (the same idempotence as join_view_epoch's dynamic overwrite,
+    without two Spark write jobs per epoch). Readers merge epoch
+    summaries on demand (read_heavy_hitters); states are associative,
+    so a maintenance job may compact old epochs into one without
+    changing answers."""
+    import pyarrow as pa
 
     from pubg_data_pipeline_spark.operators import incremental
 
     _require_local_path(state_path, "heavy_hitters_epoch")
     _recover_renamed_aside(f"{state_path}/summary")
     _recover_renamed_aside(f"{state_path}/totals")
-    spark = batch_df.sparkSession
-    # persist once: the batch feeds TWO actions (the MG summary write
-    # and the row count for the error-bound table) — without the cache
-    # each action would re-read/recompute the micro-batch source (the
-    # SURVEY §4.2 recompute-per-action anti-pattern); the count doubles
-    # as the empty-batch short-circuit.
-    batch_df.persist()
-    try:
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return
-        partial = incremental.partial_mg_state(batch_df, key_cols, counters).withColumn(
-            "__epoch", F.lit(int(epoch_id))
-        )
-        # totals FIRST: a crash between the two writes then leaves the
-        # bound transiently too LOOSE (n_rows without weights) instead
-        # of invalid/negative (weights without n_rows would make
-        # max_undercount = (N - W)/(k+1) underestimate) — the replayed
-        # epoch overwrites both partitions either way.
-        (
-            spark.createDataFrame([(int(epoch_id), int(n_rows))], "__epoch long, n_rows long")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{state_path}/totals")
-        )
-        (
-            partial.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{state_path}/summary")
-        )
-    finally:
-        batch_df.unpersist()
+    summary, n_rows = incremental.partial_mg_state(batch_df, key_cols, counters)
+    if n_rows == 0:
+        return  # idle trigger
+    # totals FIRST: a crash between the two commits then leaves the
+    # bound transiently too LOOSE (n_rows without weights) instead of
+    # invalid/negative (weights without n_rows would make
+    # max_undercount = (N - W)/(k+1) underestimate) — the replayed
+    # epoch replaces both partitions either way.
+    totals = pa.table({"n_rows": pa.array([n_rows], pa.int64())})
+    _commit_epoch_partition(totals, f"{state_path}/totals", epoch_id)
+    _commit_epoch_partition(summary, f"{state_path}/summary", epoch_id)
+
+
+def _commit_epoch_partition(table, root: str, epoch_id: int) -> None:
+    """Make ``table`` the whole ``root/__epoch=N`` partition: write one
+    parquet file into ``.__epoch=N.tmp``, move a previous partition
+    aside, rename the temp dir into place, drop the old copy. Dot
+    prefixes keep both side dirs out of every reader's listing; a
+    leftover from a crash is cleared by the next commit of the epoch."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    name = f"__epoch={int(epoch_id)}"
+    part = os.path.join(root, name)
+    tmp = os.path.join(root, f".{name}.tmp")
+    aside = os.path.join(root, f".{name}.old")
+    for d in (tmp, aside):
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.snappy.parquet"))
+    if os.path.isdir(part):
+        os.rename(part, aside)
+    os.rename(tmp, part)
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)
 
 
 def read_heavy_hitters(

@@ -69,6 +69,14 @@ def test_barrier_reliable_mode_preserves_results(spark, tmp_path, monkeypatch):
     )
 
 
+def test_get_spark_cleans_superseded_checkpoints(spark):
+    """Reliable mode writes a checkpoint directory per barrier call and
+    per CC round; the session factory must let the context cleaner
+    delete superseded ones, or the checkpoint dir grows without bound."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_connected_components_reliable_env_matches_local(spark, tmp_path, monkeypatch):
     """The CC loop picks up the session-level reliable-checkpoint dir
     when no explicit checkpoint_dir is passed, and the switch does not

@@ -1,10 +1,13 @@
 """Mergeable Misra-Gries states: merge associativity, the
 no-overestimate + bounded-undercount guarantees, and the streaming
-epoch store (idempotent replay, cross-epoch merge at read)."""
+epoch store (idempotent replay, cross-epoch merge at read, key types
+through the driver-side commit, Spark jobs per epoch)."""
 
 from __future__ import annotations
 
+import datetime
 import json
+import os
 
 from pubg_data_pipeline_spark.streaming import app
 
@@ -27,9 +30,12 @@ def test_mg_states_merge_matches_single_pass_guarantees(spark):
     ]
     df1 = spark.createDataFrame(part1, "k string").repartition(3)
     df2 = spark.createDataFrame(part2, "k string").repartition(3)
-    s1 = inc.partial_mg_state(df1, ["k"], k)
-    s2 = inc.partial_mg_state(df2, ["k"], k)
-    merged = {r["k"]: r["weight"] for r in inc.merge_mg_states([s1, s2], k).collect()}
+    s1, n1 = inc.partial_mg_state(df1, ["k"], k)
+    s2, n2 = inc.partial_mg_state(df2, ["k"], k)
+    assert (n1, n2) == (len(part1), len(part2))
+    assert s1.num_rows <= k and s2.num_rows <= k
+    states = [spark.createDataFrame(s) for s in (s1, s2)]
+    merged = {r["k"]: r["weight"] for r in inc.merge_mg_states(states, k).collect()}
 
     truth = _truth(part1 + part2)
     n = len(part1) + len(part2)
@@ -117,3 +123,148 @@ def test_compact_heavy_hitters_preserves_answers(spark, tmp_path):
     import os
     dirs = [d for d in os.listdir(state / "summary") if d.startswith("__epoch=")]
     assert dirs == ["__epoch=0"]
+
+
+def _hive_rows(path):
+    """Rows as pyarrow's hive-partitioned dataset reads them; the
+    ``__epoch=N`` directories start with ``_``, which pyarrow skips by
+    default."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, partitioning="hive", ignore_prefixes=[".", "_SUCCESS"]).to_table()
+
+
+def _typed_batch(spark):
+    ts1 = datetime.datetime(2024, 1, 1, 5, 0, 0)
+    ts2 = datetime.datetime(2024, 3, 1, 12, 30, 1, 123456)
+    rows = (
+        [("a", 1, ts1)] * 6
+        + [(None, None, None)] * 5
+        + [("b", 2**40, ts2)] * 3
+        + [("a", 2, None)] * 2
+    )
+    return spark.createDataFrame(rows, "s string, b bigint, ts timestamp")
+
+
+def test_epoch_key_types_round_trip(spark, tmp_path):
+    """String, bigint, null and timestamp keys written by the driver
+    read back with Spark's types through Spark and through pyarrow;
+    with counters above the distinct-key count no offset applies, so
+    each weight is the exact count."""
+    state = str(tmp_path / "hh_types")
+    keys = ["s", "b", "ts"]
+    batch = _typed_batch(spark)
+    app.heavy_hitters_epoch(batch, 3, state, keys, counters=10)
+    exact = batch.groupBy(*keys).count().withColumnRenamed("count", "weight")
+
+    got = spark.read.parquet(f"{state}/summary")
+    assert dict(got.dtypes) == {
+        "s": "string", "b": "bigint", "ts": "timestamp", "weight": "bigint", "__epoch": "int"
+    }
+    assert sorted(got.drop("__epoch").collect(), key=str) == sorted(exact.collect(), key=str)
+    totals = spark.read.parquet(f"{state}/totals")
+    assert dict(totals.dtypes) == {"n_rows": "bigint", "__epoch": "int"}
+    assert [tuple(r) for r in totals.collect()] == [(16, 3)]
+
+    table = _hive_rows(f"{state}/summary")
+    assert table.column("__epoch").to_pylist() == [3] * 4
+    want = exact.toArrow().to_pylist()
+    assert sorted(table.drop(["__epoch"]).to_pylist(), key=str) == sorted(want, key=str)
+    assert _hive_rows(f"{state}/totals").to_pylist() == [{"n_rows": 16, "__epoch": 3}]
+
+
+def test_driver_epoch_merges_with_compacted_epoch0(spark, tmp_path):
+    """An epoch the driver writes after compaction sits beside the
+    Spark-written epoch 0 (different writers, same read schema) and
+    merges exactly: with counters above the distinct-key count every
+    weight is the true total and the undercount bound is 0."""
+    state = str(tmp_path / "hh_mixed")
+    keys = ["s", "b", "ts"]
+    batches = [_typed_batch(spark) for _ in range(2)]
+    batches.append(_typed_batch(spark).filter("s = 'a'"))
+    for eid in (0, 1):
+        app.heavy_hitters_epoch(batches[eid], eid, state, keys, counters=10)
+    app.compact_heavy_hitters(spark, state, keys, counters=10)
+    app.heavy_hitters_epoch(batches[2], 2, state, keys, counters=10)
+    parts = sorted(d for d in os.listdir(f"{state}/summary") if d.startswith("__epoch="))
+    assert parts == ["__epoch=0", "__epoch=2"]
+
+    truth = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = sorted(
+        ((tuple(r[:3]), r[3], 0.0) for r in truth.groupBy(*keys).count().collect()), key=str
+    )
+    got = sorted(
+        ((tuple(r[:3]), r["weight"], r["max_undercount"])
+         for r in app.read_heavy_hitters(spark, state, keys, counters=10).collect()),
+        key=str,
+    )
+    assert got == want
+
+
+def test_epoch_replay_leaves_one_data_file(spark, tmp_path):
+    """A replayed epoch replaces its own partition: one data file, no
+    temp or aside dirs left behind; an empty batch commits nothing."""
+    state = tmp_path / "hh_replay"
+    batch = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "k string")
+    for _ in range(3):
+        app.heavy_hitters_epoch(batch, 1, str(state), ["k"], counters=4)
+    app.heavy_hitters_epoch(batch.limit(0), 2, str(state), ["k"], counters=4)  # idle trigger
+    for sub in ("summary", "totals"):
+        assert os.listdir(state / sub) == ["__epoch=1"]
+        files = os.listdir(state / sub / "__epoch=1")
+        assert len([f for f in files if not f.startswith((".", "_"))]) == 1
+    assert sorted(tuple(r) for r in spark.read.parquet(str(state / "summary")).collect()) == [
+        ("a", 5, 1), ("b", 2, 1)
+    ]
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` in its own job group; return its job ids and the
+    subset that ran outside any SQL execution. A parquet read without a
+    schema starts exactly such a job: footer schema inference runs while
+    the read is resolved, before any query executes."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    in_sql = set()
+    n_exec = store.executionsCount()
+    executions = store.executionsList(max(0, n_exec - 50), 50).iterator()
+    while executions.hasNext():
+        it = executions.next().jobs().keys().iterator()
+        while it.hasNext():
+            in_sql.add(int(it.next()))
+    return jobs, jobs - in_sql
+
+
+def test_epoch_job_counts(spark, tmp_path):
+    """Pins: a heavy-hitter epoch is one native job plus its shuffle
+    stage (at most 2 jobs, no Python worker); rollup and ingest epochs
+    over existing state read it with a declared schema, so neither
+    starts a schema-inference job."""
+    events = spark.range(2000).selectExpr(
+        "timestamp_seconds(id * 60) AS ts", "CAST(id % 50 AS DOUBLE) AS value",
+        "id % 37 AS k",
+    )
+    docs = spark.range(100).selectExpr(
+        "id AS doc_id", "CONCAT('doc ', CAST(id % 70 AS STRING)) AS text"
+    )
+    hh, rollup = str(tmp_path / "hh"), str(tmp_path / "rollup")
+    index, corpus = str(tmp_path / "index"), str(tmp_path / "corpus")
+    app.heavy_hitters_epoch(events, 0, hh, ["k"], counters=8)
+    app.rollup_merge_epoch(events, 0, rollup)
+    app.ingest_dedup_epoch(docs, 0, index, corpus)
+
+    jobs, _ = _group_jobs(spark, "hh-epoch", lambda: app.heavy_hitters_epoch(
+        events, 1, hh, ["k"], counters=8))
+    assert 1 <= len(jobs) <= 2, f"heavy-hitter epoch started {len(jobs)} jobs"
+    _, outside = _group_jobs(spark, "rollup-epoch", lambda: app.rollup_merge_epoch(
+        events.filter("id % 2 = 0"), 1, rollup))
+    assert not outside, f"rollup epoch started jobs outside a query: {outside}"
+    _, outside = _group_jobs(spark, "ingest-epoch", lambda: app.ingest_dedup_epoch(
+        docs.selectExpr("doc_id + 100 AS doc_id", "text"), 1, index, corpus))
+    assert not outside, f"ingest epoch started jobs outside a query: {outside}"
