@@ -36,8 +36,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: RDD ids registered by the most recent barrier call, per site key.
-_SITE_BLOCKS: dict[str, set[int]] = {}
+#: RDD ids registered by the most recent barrier call, keyed by the
+#: SparkContext's application id and the site: RDD ids restart in a
+#: new context, so ids recorded under a stopped one must never be
+#: released in its successor.
+_SITE_BLOCKS: dict[tuple[str, str], set[int]] = {}
 
 _CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 
@@ -97,8 +100,9 @@ def barrier(df: DataFrame, site: str, eager: bool = False) -> DataFrame:
     before = persisted_rdd_ids(spark)
     out = df.localCheckpoint(eager=eager)
     ids = persisted_rdd_ids(spark) - before
-    stale = _SITE_BLOCKS.get(site)
+    key = (spark.sparkContext.applicationId, site)
+    stale = _SITE_BLOCKS.get(key)
     if stale:
         release_rdds(spark, stale)
-    _SITE_BLOCKS[site] = ids
+    _SITE_BLOCKS[key] = ids
     return out

@@ -17,21 +17,29 @@ component pointer TWICE (label(label(label(n)))) — doubling cuts
 chain depth ~4x per round, giving O(log d) rounds on diameter-d
 components instead of O(d) for plain neighbor flooding.
 
-Scale notes (100 TB): each round is one join+aggregate on the node id
-plus two pointer self-joins, all over the *node/edge* tables — no
-per-component serialization point, no driver-side graph. Rounds
-localCheckpoint their result: iterative self-joins otherwise double
-the Catalyst plan every round (analysis time goes exponential) and
-replay the whole lineage on failure. Dedup graphs converge in 2-4
+Small graphs: an edge list of at most ``_DRIVER_MAX_EDGES`` rows
+(about 8 MB of Arrow) is collected once and labeled on the driver with
+the same min-label + pointer-jump fixpoint in numpy — one bounded
+collect instead of several scheduled jobs per round. The bound is on
+the edge count alone, never on cores or configuration.
+
+Scale notes (100 TB): above the bound each round is one join+aggregate
+on the node id plus two pointer self-joins, all over the *node/edge*
+tables — no per-component serialization point, no driver-side graph.
+Rounds localCheckpoint their result: iterative self-joins otherwise
+double the Catalyst plan every round (analysis time goes exponential)
+and replay the whole lineage on failure. Dedup graphs converge in 2-4
 rounds (components are near-cliques of duplicates, diameter ~1-2).
-Graphs that fit one loop partition compile their rounds without AQE
-(one scheduler job per round instead of one per exchange); wider
-graphs keep AQE for runtime skew-splitting.
+The loop runs under the session's own settings (AQE on) and writes
+no session conf.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # DataFrame.unpersist() is a NO-OP for localCheckpoint blocks (they
@@ -46,6 +54,12 @@ from pubg_data_pipeline_spark.operators.ckpt import (
     release_rdds as _release_rdds,
     reliable_checkpoint_dir,
 )
+
+#: Edge lists of at most this many rows are collected and labeled on
+#: the driver (two id columns, about 8 MB of Arrow for longs). The
+#: bound depends on the edge count alone, so the path a graph takes
+#: does not change with the core count.
+_DRIVER_MAX_EDGES = 500_000
 
 
 def _ckpt_eager(df: DataFrame) -> DataFrame:
@@ -73,7 +87,12 @@ def connected_components(
     component — a deterministic canonical cluster id.
 
     Edges are treated as undirected; self-loops and duplicates are
-    fine (they collapse in the symmetrize-distinct step).
+    fine (they collapse in the symmetrize-distinct step). A NULL
+    endpoint is not a node: the edge adds only its non-null end.
+
+    Edge lists of at most ``_DRIVER_MAX_EDGES`` rows are labeled on
+    the driver (one bounded collect, see :func:`_driver_components`);
+    larger ones run the distributed loop.
 
     ``checkpoint_dir``: by default rounds truncate lineage with
     ``localCheckpoint`` — executor-local blocks, right for local mode
@@ -108,180 +127,176 @@ def connected_components(
     # logical plan, so an expensive pair-generation pipeline (shingle
     # explode + 3 aggregates for the Jaccard case) would be analyzed
     # and executed twice — measured 2x the whole-query cost at sf0.1.
-    # After the checkpoint the union reads a cached RDD twice instead.
+    # After the checkpoint the collect or the union reads cached blocks.
     e0, e0_ids = _ckpt(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), eager=True)
-    # One fast count over the just-cached blocks sizes everything below
-    # (the former separate symmetrize-checkpoint + count pass is folded
-    # into the single edge-table build — one setup job saved).
-    n_raw = e0.count()
-    if n_raw == 0:
-        # empty LOCAL relation with the contract schema — must not read
-        # e0 (its checkpoint blocks are released and unrecomputable)
-        schema = e0.select(
-            F.col("a").alias("node"), F.col("a").alias("component")
-        ).schema
+    schema = e0.select(F.col("a").alias("node"), F.col("a").alias("component")).schema
+    # One bounded collect decides the path: a table of at most the
+    # bound is the whole graph, so it is labeled on the driver.
+    small = e0.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if small.num_rows <= _DRIVER_MAX_EDGES:
         _release_rdds(spark, e0_ids)
-        return spark.createDataFrame([], schema)
-    # Size the loop's shuffle width to the edge count (~500k symmetrized
-    # edges per partition), exactly as AQE would coalesce it: the
-    # near-dup edge list is orders smaller than the corpus, and running
-    # log-d rounds of 32-way shuffles over a few thousand edges spends
-    # everything on task scheduling.
-    n_parts = max(
-        1, min(spark.sparkContext.defaultParallelism, (2 * n_raw) // 500_000)
+        return spark.createDataFrame(_driver_components(small), schema)
+
+    # Symmetrize, then append one SELF-EDGE (n, n) per node: the
+    # per-round neighbor-min over this table sees the node's own
+    # label through its self-edge, so a round is ONE join + ONE
+    # aggregate — the former least(own, nbr) LEFT JOIN against the
+    # labels and the separate singleton-node union branch both fold
+    # into the aggregate (guide §2.4: two exchanges per round
+    # removed). Self-loop-only nodes ride the same self-edge path
+    # and keep their singleton component.
+    sym = (
+        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
     )
-    # Loop-scoped execution mode: when the whole graph fits ONE loop
-    # partition there is nothing for AQE to decide (no skew to split,
-    # nothing to coalesce, every exchange is 1-way) — but AQE still
-    # charges one stage-materialization JOB per exchange per round,
-    # which at sf0.1 made a 600-edge / 3-round closure cost 40 driver
-    # jobs (~2s of pure scheduling). Compiling the loop without AQE at
-    # an explicit 1-way width turns each round into a single job. For
-    # any graph wider than one partition AQE stays on: its runtime
-    # skew-split/coalesce earns the constants at real scale, so the
-    # switch is derived from data size, not from the local core count.
-    loop_aqe_off = n_parts == 1
-    conf_saved = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    try:
-        if loop_aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        # Symmetrize, then append one SELF-EDGE (n, n) per node: the
-        # per-round neighbor-min over this table sees the node's own
-        # label through its self-edge, so a round is ONE join + ONE
-        # aggregate — the former least(own, nbr) LEFT JOIN against the
-        # labels and the separate singleton-node union branch both fold
-        # into the aggregate (guide §2.4: two exchanges per round
-        # removed). Self-loop-only nodes ride the same self-edge path
-        # and keep their singleton component.
-        sym = (
-            e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        nodes = (
-            e0.select("a").union(e0.select(F.col("b").alias("a"))).distinct()
-        )
-        # Partition by "b" — the loop's only join against e keys on b
-        # (labels renamed node->b), so the edge side never reshuffles
-        # inside the loop.
-        e, _e_ids = _ckpt(
-            sym.unionByName(nodes.select("a", F.col("a").alias("b"))).repartition(
-                n_parts, "b"
-            ),
-            eager=True,
-        )
-        # Initialize at least(node, min_neighbor) — the first half of a
-        # propagation round folded into the init aggregate (the
-        # self-edge makes min(b) include the node itself). Dup graphs
-        # are near-cliques, and a clique is already at fixpoint after
-        # this, so the loop's first round detects convergence
-        # immediately (one full round saved on the dominant shape).
-        init = e.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("comp"))
-        # Convergence detection: labels only ever decrease. For NUMERIC
-        # ids sum(comp) is strictly monotone until fixpoint — two equal
-        # consecutive sums mean no label moved, one tiny aggregation per
-        # round (which doubles as the action materializing the round's
-        # checkpoint); decimal(38,0) keeps it exact under ANSI at any id
-        # scale. Non-numeric ids (string doc keys) cannot be cast — ANSI
-        # throws, and legacy NULL sums would fake instant convergence —
-        # so they use an exact changed-row probe against the previous
-        # labels (limit(1) short-circuits; one small join per round).
-        labels, labels_ids = _ckpt(init, eager=False)
-        numeric_comp = dict(labels.dtypes)["comp"] in (
-            "tinyint", "smallint", "int", "bigint",
-        ) or dict(labels.dtypes)["comp"].startswith("decimal")
+    nodes = (
+        e0.select("a").union(e0.select(F.col("b").alias("a"))).distinct()
+    )
+    # Partition by "b" — the loop's only join against e keys on b
+    # (labels renamed node->b), so the edge side never reshuffles
+    # inside the loop; AQE sizes the width from the data.
+    e, _e_ids = _ckpt(
+        sym.unionByName(nodes.select("a", F.col("a").alias("b"))).repartition("b"),
+        eager=True,
+    )
+    # Initialize at least(node, min_neighbor) — the first half of a
+    # propagation round folded into the init aggregate (the
+    # self-edge makes min(b) include the node itself). Dup graphs
+    # are near-cliques, and a clique is already at fixpoint after
+    # this, so the loop's first round detects convergence
+    # immediately (one full round saved on the dominant shape).
+    init = e.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("comp"))
+    # Convergence detection: labels only ever decrease. For NUMERIC
+    # ids sum(comp) is strictly monotone until fixpoint — two equal
+    # consecutive sums mean no label moved, one tiny aggregation per
+    # round (which doubles as the action materializing the round's
+    # checkpoint); decimal(38,0) keeps it exact under ANSI at any id
+    # scale. Non-numeric ids (string doc keys) cannot be cast — ANSI
+    # throws, and legacy NULL sums would fake instant convergence —
+    # so they use an exact changed-row probe against the previous
+    # labels (limit(1) short-circuits; one small join per round).
+    labels, labels_ids = _ckpt(init, eager=False)
+    numeric_comp = dict(labels.dtypes)["comp"] in (
+        "tinyint", "smallint", "int", "bigint",
+    ) or dict(labels.dtypes)["comp"].startswith("decimal")
 
-        def _label_sum(frame: DataFrame):
-            return frame.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
+    def _label_sum(frame: DataFrame):
+        return frame.agg(
+            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+        ).collect()[0]["s"]
 
-        # Seed the convergence detector with the INIT labels' sum,
-        # riding the very action that materializes the init checkpoint:
-        # labels are monotone non-increasing, so round-1 sum == init sum
-        # proves round 1 moved nothing and init was already the fixpoint.
+    # Seed the convergence detector with the INIT labels' sum,
+    # riding the very action that materializes the init checkpoint:
+    # labels are monotone non-increasing, so round-1 sum == init sum
+    # proves round 1 moved nothing and init was already the fixpoint.
+    if numeric_comp:
+        prev_sum = _label_sum(labels)
+    else:
+        prev_sum = None
+        labels.count()  # materialize the lazy init checkpoint
+    # e0 fed sym, nodes and e; dead weight once e materializes —
+    # release its blocks so repeated CC calls in one session don't
+    # accumulate checkpoint storage.
+    _release_rdds(spark, e0_ids)
+
+    def _jump(frame: DataFrame) -> DataFrame:
+        """comp'(n) = comp(comp(n)) — one pointer-jump shortcut.
+        comp is always some node's id and every node carries a
+        label, so the left join's coalesce is pure safety."""
+        ptr = frame.select(
+            F.col("node").alias("comp"), F.col("comp").alias("comp2")
+        )
+        return frame.join(ptr, "comp", "left").select(
+            "node",
+            F.least(
+                F.col("comp"), F.coalesce(F.col("comp2"), F.col("comp"))
+            ).alias("comp"),
+        )
+
+    for _ in range(max_iter):
+        # 1. neighbor min fused with self: the self-edge contributes
+        # the node's own label, so this single aggregate IS
+        # least(comp(n), min_{m in N(n)} comp(m)) over every node.
+        stepped = (
+            e.join(labels.withColumnRenamed("node", "b"), "b")
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("comp").alias("comp"))
+        )
+        # 2. POINTER DOUBLING: two jump passes per round (quarters
+        # chain depth per round instead of halving it). Each jump
+        # references its input twice (self-join); persisting the
+        # input makes the diamond compute once — AQE in Spark 4.1.2
+        # never emits ReusedExchange for duplicated subtrees (round-8
+        # probes), and the two exchanges hash different columns so
+        # even static planning cannot share them. Plain persist (not
+        # localCheckpoint) keeps lineage intact, so reliable-
+        # checkpoint deployments stay executor-loss recoverable and
+        # the blocks are releasable via the Dataset cache manager.
+        stepped.persist()
+        j1 = _jump(stepped)
+        j1.persist()
+        jumped, jumped_ids = _ckpt(_jump(j1), eager=False)
         if numeric_comp:
-            prev_sum = _label_sum(labels)
+            cur_sum = _label_sum(jumped)
+            converged = cur_sum == prev_sum
+            prev_sum = cur_sum
         else:
-            prev_sum = None
-            labels.count()  # materialize the lazy init checkpoint
-        # e0 fed sym, nodes and e; dead weight once e materializes —
-        # release its blocks so repeated CC calls in one session don't
-        # accumulate checkpoint storage.
-        _release_rdds(spark, e0_ids)
-
-        def _jump(frame: DataFrame) -> DataFrame:
-            """comp'(n) = comp(comp(n)) — one pointer-jump shortcut.
-            comp is always some node's id and every node carries a
-            label, so the left join's coalesce is pure safety."""
-            ptr = frame.select(
-                F.col("node").alias("comp"), F.col("comp").alias("comp2")
-            )
-            return frame.join(ptr, "comp", "left").select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("comp2"), F.col("comp"))
-                ).alias("comp"),
-            )
-
-        for _ in range(max_iter):
-            # 1. neighbor min fused with self: the self-edge contributes
-            # the node's own label, so this single aggregate IS
-            # least(comp(n), min_{m in N(n)} comp(m)) over every node.
-            stepped = (
-                e.join(labels.withColumnRenamed("node", "b"), "b")
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("comp").alias("comp"))
-            )
-            # 2. POINTER DOUBLING: two jump passes per round (quarters
-            # chain depth per round instead of halving it). Each jump
-            # references its input twice (self-join); persisting the
-            # input makes the diamond compute once — AQE in Spark 4.1.2
-            # never emits ReusedExchange for duplicated subtrees (round-8
-            # probes), and the two exchanges hash different columns so
-            # even static planning cannot share them. Plain persist (not
-            # localCheckpoint) keeps lineage intact, so reliable-
-            # checkpoint deployments stay executor-loss recoverable and
-            # the blocks are releasable via the Dataset cache manager.
-            stepped.persist()
-            j1 = _jump(stepped)
-            j1.persist()
-            jumped, jumped_ids = _ckpt(_jump(j1), eager=False)
-            if numeric_comp:
-                cur_sum = _label_sum(jumped)
-                converged = cur_sum == prev_sum
-                prev_sum = cur_sum
-            else:
-                converged = (
-                    jumped.join(
-                        labels.select("node", F.col("comp").alias("__prev")), "node"
-                    )
-                    .filter(F.col("comp") != F.col("__prev"))
-                    .limit(1)
-                    .count()
-                    == 0
+            converged = (
+                jumped.join(
+                    labels.select("node", F.col("comp").alias("__prev")), "node"
                 )
-            # the action above materialized `jumped`; the round's
-            # intermediates and the superseded labels are now dead —
-            # release before rebinding (the final round's checkpoint
-            # blocks back the returned frame and stay)
-            stepped.unpersist()
-            j1.unpersist()
-            _release_rdds(spark, labels_ids)
-            labels, labels_ids = jumped, jumped_ids
-            if converged:
-                break
-        # only the final labels blocks back the returned frame; the edge
-        # table is loop-internal
-        _release_rdds(spark, _e_ids)
-    finally:
-        for k, v in conf_saved.items():
-            spark.conf.set(k, v)
+                .filter(F.col("comp") != F.col("__prev"))
+                .limit(1)
+                .count()
+                == 0
+            )
+        # the action above materialized `jumped`; the round's
+        # intermediates and the superseded labels are now dead —
+        # release before rebinding (the final round's checkpoint
+        # blocks back the returned frame and stay)
+        stepped.unpersist()
+        j1.unpersist()
+        _release_rdds(spark, labels_ids)
+        labels, labels_ids = jumped, jumped_ids
+        if converged:
+            break
+    # only the final labels blocks back the returned frame; the edge
+    # table is loop-internal
+    _release_rdds(spark, _e_ids)
     return labels.select("node", F.col("comp").alias("component"))
+
+
+def _driver_components(tbl: pa.Table) -> pa.Table:
+    """Label a collected ``(a, b)`` edge table on the driver.
+
+    Non-null ids map to dense indices in sorted order, so index order
+    is id order for longs, strings and decimals alike and the minimum
+    index of a component names its minimum id. Labels start at the
+    own index; each round takes the neighbor minimum in both edge
+    directions (``np.minimum.at``) and then shortcuts every label
+    through its pointer until the labels stop moving. Labels only
+    decrease, so the loop ends; at the fixpoint both ends of every
+    edge agree and every label is its component's minimum index."""
+    a, b = tbl.column("a"), tbl.column("b")
+    ids = pa.chunked_array(a.chunks + b.chunks, type=a.type).drop_null()
+    uniq = pc.unique(ids)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    ia = pc.index_in(a, value_set=uniq)
+    ib = pc.index_in(b, value_set=uniq)
+    both = pc.and_(pc.is_valid(ia), pc.is_valid(ib))
+    u = ia.filter(both).to_numpy()
+    v = ib.filter(both).to_numpy()
+    lab = np.arange(len(uniq))
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, u, lab[v])
+        np.minimum.at(nxt, v, lab[u])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, lab):
+            break
+        lab = nxt
+    return pa.table({"node": uniq, "component": uniq.take(pa.array(lab))})
 
 
 def dedup_clusters(

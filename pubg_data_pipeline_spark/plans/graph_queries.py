@@ -83,7 +83,9 @@ def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality keeper / leakage-safe split), so it's a shared derived
     artifact exactly like the pair table it closes — at 100 TB both
     would be written out once and every downstream consumer reads the
-    table. Same mtime/size cache key discipline."""
+    table. Same mtime/size cache key discipline. No extra barrier: the
+    closure already comes back as a local relation (driver-labeled
+    graphs) or backed by the loop's final labels checkpoint."""
     from pubg_data_pipeline_spark.plans.base import dataset_cache_tag
 
     key = "cc05:" + dataset_cache_tag(sf_dir, "documents")
@@ -92,7 +94,7 @@ def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         return cached
     comp = graph.connected_components(
         _jaccard_pairs(spark, sf_dir), src="id_a", dst="id_b"
-    ).localCheckpoint(eager=True)
+    )
     _PAIRS_CACHE[key] = comp
     return comp
 

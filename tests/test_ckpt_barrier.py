@@ -13,6 +13,10 @@ def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
+def _key(spark, site):
+    return (spark.sparkContext.applicationId, site)
+
+
 def test_barrier_releases_superseded_site_blocks(spark):
     """Repeated executions of one query (the bench runs each 4+ times)
     must keep exactly ONE live copy per barrier site, not accumulate a
@@ -26,7 +30,7 @@ def test_barrier_releases_superseded_site_blocks(spark):
     growth = _n_persistent(spark) - before
     assert growth <= 1, f"leaked {growth} checkpoint RDDs over 4 calls"
     # cleanup the final live copy so other tests see a clean registry
-    ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop("test:release", set()))
+    ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop(_key(spark, "test:release"), set()))
 
 
 def test_barrier_sites_are_independent(spark):
@@ -37,7 +41,27 @@ def test_barrier_sites_are_independent(spark):
     b = ckpt.barrier(df.select((F.col("id") * 3).alias("x")), site="test:b")
     assert a.unionAll(b).count() == 200  # both still computable
     for site in ("test:a", "test:b"):
-        ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop(site, set()))
+        ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop(_key(spark, site), set()))
+
+
+def test_barrier_leaves_rdds_recorded_under_another_context(spark):
+    """RDD ids restart in a new SparkContext: ids a barrier site
+    recorded under a stopped context name unrelated live RDDs in the
+    new one, so the site must not release them."""
+    before = ckpt.persisted_rdd_ids(spark)
+    live = spark.range(100).localCheckpoint(eager=True)
+    live_ids = ckpt.persisted_rdd_ids(spark) - before
+    assert live_ids
+    ckpt._SITE_BLOCKS[("stopped-app", "test:stale")] = set(live_ids)
+    try:
+        out = ckpt.barrier(spark.range(10), site="test:stale", eager=True)
+        assert out.count() == 10
+        assert live_ids <= ckpt.persisted_rdd_ids(spark)
+        assert live.count() == 100
+    finally:
+        ckpt._SITE_BLOCKS.pop(("stopped-app", "test:stale"), None)
+        ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop(_key(spark, "test:stale"), set()))
+        ckpt.release_rdds(spark, live_ids)
 
 
 def test_barrier_reliable_mode_preserves_results(spark, tmp_path, monkeypatch):
@@ -57,7 +81,7 @@ def test_barrier_reliable_mode_preserves_results(spark, tmp_path, monkeypatch):
     )
     got = sorted((r["k"], r["n"]) for r in out.collect())
     assert got == expected
-    assert "test:reliable" not in ckpt._SITE_BLOCKS  # no local blocks registered
+    assert _key(spark, "test:reliable") not in ckpt._SITE_BLOCKS  # no local blocks registered
     # files land under the SESSION's checkpoint dir — ckpt_dir if this
     # test set it first, or an earlier test's dir the barrier correctly
     # reused (setCheckpointDir is once-per-session)
@@ -83,6 +107,9 @@ def test_connected_components_reliable_env_matches_local(spark, tmp_path, monkey
     change the result."""
     from pubg_data_pipeline_spark.operators import graph
 
+    # force the distributed loop: the driver path would label this
+    # small graph without a single reliable-checkpoint round
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8), (9, 9)], "src long, dst long"
     )

@@ -1,17 +1,37 @@
 """Connected-components operator: planted structure, chain diameter
-(pointer-jump convergence), and cluster-dedup policy."""
+(pointer-jump convergence), and cluster-dedup policy.
+
+Every CC shape runs on both paths: the driver labeling of small edge
+lists and the distributed loop (forced by a bound of 0), which must
+agree row for row."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pubg_data_pipeline_spark.operators import graph
 
 
-def _cc(spark, edge_tuples):
-    edges = spark.createDataFrame(edge_tuples, "src long, dst long")
-    rows = graph.connected_components(edges).collect()
-    return {r["node"]: r["component"] for r in rows}
+def _components(edges, bound=None):
+    """{node: component} of ``edges`` with the driver bound set to
+    ``bound`` (None keeps the module's own)."""
+    with pytest.MonkeyPatch.context() as mp:
+        if bound is not None:
+            mp.setattr(graph, "_DRIVER_MAX_EDGES", bound)
+        rows = graph.connected_components(edges).collect()
+    comp = {r["node"]: r["component"] for r in rows}
+    assert len(comp) == len(rows), "a node was labeled twice"
+    return comp
+
+
+def _cc(spark, edge_tuples, schema="src long, dst long"):
+    """The driver path's {node: component}, after checking that the
+    distributed loop gives the same mapping."""
+    edges = spark.createDataFrame(edge_tuples, schema)
+    driver = _components(edges)
+    assert _components(edges, bound=0) == driver
+    return driver
 
 
 def test_two_components(spark):
@@ -34,10 +54,13 @@ def test_duplicate_and_reversed_edges_collapse(spark):
     assert comp[3] == 3 and comp[4] == 3
 
 
-def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
+def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
     # checkpoint_dir routes lineage truncation through fault-tolerant
     # DataFrame.checkpoint instead of localCheckpoint; results must be
     # identical and checkpoint files must actually land in the dir.
+    # The bound of 0 forces the loop: the driver path would label this
+    # small graph without a single reliable-checkpoint round.
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13)], "src long, dst long"
     )
@@ -123,13 +146,9 @@ def test_connected_components_worst_case_chain(spark):
     """A 200-node path graph is the diameter worst case for label
     propagation; pointer jumping must still converge (O(log d) rounds
     within the max_iter budget) to a single component."""
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], "src long, dst long"
-    )
-    comp = graph.connected_components(edges)
-    rows = comp.collect()
-    assert len(rows) == 200
-    assert {r["component"] for r in rows} == {0}
+    comp = _cc(spark, [(i, i + 1) for i in range(199)])
+    assert len(comp) == 200
+    assert set(comp.values()) == {0}
 
 
 def test_connected_components_two_cliques_and_bridge(spark):
@@ -137,12 +156,8 @@ def test_connected_components_two_cliques_and_bridge(spark):
     # remove the bridge -> two
     c1 = [(a, b) for a in range(20) for b in range(a + 1, 20)]
     c2 = [(a, b) for a in range(100, 120) for b in range(a + 1, 120)]
-    bridged = spark.createDataFrame(c1 + c2 + [(19, 100)], "src long, dst long")
-    comps = {r["component"] for r in graph.connected_components(bridged).collect()}
-    assert comps == {0}
-    split = spark.createDataFrame(c1 + c2, "src long, dst long")
-    comps2 = {r["component"] for r in graph.connected_components(split).collect()}
-    assert comps2 == {0, 100}
+    assert set(_cc(spark, c1 + c2 + [(19, 100)]).values()) == {0}
+    assert set(_cc(spark, c1 + c2).values()) == {0, 100}
 
 
 def test_init_fixpoint_component_mixed_with_live_chain(spark):
@@ -225,9 +240,7 @@ def test_string_node_ids_converge_exactly(spark):
     sum-cast crashed, and under legacy mode NULL sums faked instant
     convergence, silently under-merging chains of length >= 5."""
     chain = [(chr(ord("a") + i), chr(ord("a") + i + 1)) for i in range(7)]
-    edges = spark.createDataFrame(chain, "src string, dst string")
-    rows = graph.connected_components(edges).collect()
-    comp = {r["node"]: r["component"] for r in rows}
+    comp = _cc(spark, chain, "src string, dst string")
     assert comp == {chr(ord("a") + i): "a" for i in range(8)}
 
 
@@ -236,6 +249,98 @@ def test_self_loop_only_nodes_keep_their_singleton_component(spark):
     a node whose only edge is a self-loop must still be emitted."""
     comp = _cc(spark, [(5, 5), (1, 2)])
     assert comp == {1: 1, 2: 1, 5: 5}
+
+
+def test_null_endpoints_are_dropped(spark):
+    """A NULL endpoint is no node: the edge keeps only its non-null
+    end, as a singleton unless another edge joins it."""
+    comp = _cc(spark, [(1, 2), (None, 3), (4, None), (None, None), (2, None)])
+    assert comp == {1: 1, 2: 1, 3: 3, 4: 4}
+    assert _cc(spark, [(None, None)]) == {}
+    assert _cc(spark, []) == {}
+
+
+def test_random_graph_matches_union_find(spark):
+    """The driver labeling on a seeded random sparse graph (ids
+    unrelated to edge order, many small components) against a
+    pure-Python union-find reference."""
+    import random
+
+    rng = random.Random(7)
+    ids = rng.sample(range(10**6), 120)
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(90)]
+    parent = {n: n for e in edges for n in e}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    got = _components(spark.createDataFrame(edges, "src long, dst long"))
+    assert got == {n: find(n) for n in parent}
+
+
+def test_driver_bound_boundary(spark, monkeypatch):
+    """With the bound at N, an N-edge graph is labeled on the driver
+    and an (N+1)-edge graph runs the loop; each gives the same mapping
+    as the other path."""
+    calls = []
+    labeler = graph._driver_components
+
+    def counting(tbl):
+        calls.append(tbl.num_rows)
+        return labeler(tbl)
+
+    monkeypatch.setattr(graph, "_driver_components", counting)
+    n = 6
+    at = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
+    over = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)] + [(20, 21)], "src long, dst long"
+    )
+    driver = _components(at, bound=n)
+    assert calls == [n]
+    assert driver == _components(at, bound=0) == {i: 0 for i in range(n + 1)}
+    loop = _components(over, bound=n)
+    assert calls == [n]
+    assert loop == _components(over, bound=n + 1) == {**driver, 20: 20, 21: 20}
+    assert calls == [n, n + 1]
+
+
+def test_driver_path_job_count(spark):
+    """Pin: on a small graph CC runs the edge checkpoint and the one
+    bounded collect — at most 2 Spark jobs, none per round."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(i, i + 1) for i in range(50)], "src long, dst long")
+    group = "test_graph:driver_path_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        comp = graph.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, f"driver path started {len(jobs)} jobs"
+    assert {r["component"] for r in comp.collect()} == {0}
+
+
+def test_cc_writes_no_session_conf(spark, monkeypatch):
+    """Neither path may change session settings under a caller that
+    shares the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def recording(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording)
+    comp = _cc(spark, [(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert writes == []
 
 
 def test_repeated_cc_calls_leave_no_cached_blocks(spark):
