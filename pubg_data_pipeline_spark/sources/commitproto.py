@@ -1,8 +1,14 @@
 """The shared commit protocol behind every storage-maintenance write.
 
-Four subsystems publish state the same way — write a tmp file, fsync,
-atomically install, sweep what the new state obsoletes:
+Each subsystem below publishes state the same way — write a tmp copy,
+atomically install it, sweep what the new state obsoletes:
 
+- directory swaps (:func:`swap_dir` + :func:`recover`): the
+  rename-aside swap that installs a rewritten table — streaming state
+  epochs and compactions (:mod:`streaming.app`), small-file
+  compaction (:func:`sources.io.compact_parquet`) and the
+  heavy-hitter epoch-partition commit; side dirs follow one naming
+  rule (:func:`tmp_dir`, :func:`aside_dir`);
 - snapshot manifests (:mod:`sources.snapshots`): create-only slot
   publish via ``os.link`` (losing a version race is detected, not
   clobbered);
@@ -17,9 +23,9 @@ atomically install, sweep what the new state obsoletes:
 
 This module is the ONE place those disciplines live, so a lake-format
 backend (Delta/Iceberg MERGE, conditional PUT, catalog commit) replaces
-this module — not four hand-rolled protocols. Everything here is plain
-local-filesystem code by design; :func:`require_local_path` is the
-shared fail-loud gate every caller runs first.
+this module — not one hand-rolled protocol per subsystem. Everything
+here is plain local-filesystem code by design; :func:`require_local_path`
+is the shared fail-loud gate every caller runs first.
 
 (Reference contrast: the reference appends to HDFS with no commit
 protocol at all — a crashed job leaves partial files readers serve;
@@ -44,6 +50,68 @@ def require_local_path(path: str, op: str, hint: str) -> str:
     if "://" in path:
         raise ValueError(f"{op} uses local-filesystem atomic commits; got remote URI {path!r} — {hint}")
     return path
+
+
+def _side_dir(path: str, suffix: str) -> str:
+    head, base = os.path.split(os.path.normpath(path))
+    return os.path.join(head, f".{base}.{suffix}")
+
+
+def tmp_dir(path: str, tag) -> str:
+    """Where a writer stages the replacement for directory ``path``:
+    ``dirname/.{base}.tmp-{tag}``. The dot prefix keeps it out of
+    Spark's and pyarrow's listings of the parent (which matters when
+    ``path`` is itself a ``col=value`` partition); ``tag`` tells
+    concurrent or successive writers apart (an epoch id, "compact")."""
+    return _side_dir(path, f"tmp-{tag}")
+
+
+def aside_dir(path: str) -> str:
+    """Where :func:`swap_dir` parks the live ``path`` between its two
+    renames: ``dirname/.{base}.old``."""
+    return _side_dir(path, "old")
+
+
+def recover(path: str) -> bool:
+    """Undo a swap that crashed between its two renames: if ``path`` is
+    missing and its aside exists, rename the aside back. Returns True
+    iff it restored something; a present ``path`` is never touched.
+
+    Race tolerance: a concurrent recoverer (two readers hitting the
+    same crashed state) or a writer mid-swap can win the rename first —
+    losing is fine as long as ``path`` exists afterwards, so OSError
+    is swallowed iff it reappeared. Tmp dirs are left alone, because a
+    reader may run this while a writer's tmp is in flight; leftovers
+    are :func:`sources.io.vacuum_state_artifacts`' job."""
+    aside = aside_dir(path)
+    if os.path.isdir(path) or not os.path.isdir(aside):
+        return False
+    try:
+        os.rename(aside, path)
+    except OSError:
+        if not os.path.isdir(path):
+            raise  # genuinely stuck, not a lost recovery race
+        return False
+    return True
+
+
+def swap_dir(tmp: str, path: str) -> None:
+    """Install the fully written directory ``tmp`` as ``path``: move the
+    live ``path`` aside, rename ``tmp`` onto it, drop the aside. At no
+    instant is the only copy deleted: a crash between the renames
+    leaves the previous state at :func:`aside_dir`, which
+    :func:`recover` restores. Recovery runs first, so the stale-aside
+    delete below only ever removes a copy that ``path`` supersedes.
+    Single writer per ``path`` (run one compactor per state)."""
+    recover(path)
+    aside = aside_dir(path)
+    if os.path.isdir(path):
+        if os.path.isdir(aside):
+            shutil.rmtree(aside)
+        os.rename(path, aside)
+    os.rename(tmp, path)
+    if os.path.isdir(aside):
+        shutil.rmtree(aside)
 
 
 def _write_tmp_json(tmp: str, doc: dict) -> None:

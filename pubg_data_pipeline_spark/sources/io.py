@@ -131,48 +131,18 @@ def compact_parquet(
     setup. Compaction is the standing maintenance job (OPTIMIZE in
     lake formats). Write-to-temp-then-swap keeps readers consistent on
     a filesystem; on a lake table the same plan commits as one
-    transaction."""
-    import os
-    import shutil
+    transaction. The swap is :func:`sources.commitproto.swap_dir`: a
+    crash between its renames leaves the previous table aside, where
+    ``commitproto.recover(path)`` restores it."""
+    from pubg_data_pipeline_spark.sources import commitproto
 
     df = spark.read.parquet(path)
     out = df.repartition(target_files)
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-    # rename-aside swap (the streaming state sinks' protocol): at no
-    # instant is the only copy of the table deleted — a crash between
-    # the renames leaves the previous data recoverable at `.old`
-    # (rmtree-then-rename had a window where the table was simply gone)
-    tmp = f"{path}.compact-tmp"
-    old = f"{path}.old"
+    tmp = commitproto.tmp_dir(path, "compact")
     out.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
-def recover_compacted(path: str) -> bool:
-    """Crash recovery for :func:`compact_parquet`'s rename-aside swap:
-    if a crash landed between `path -> path.old` and `tmp -> path`, the
-    previous table survives at ``path.old`` — restore it (the fresher
-    compacted copy at ``path.compact-tmp``, if complete, is equivalent
-    data; restoring the ORIGINAL is the conservative choice since the
-    tmp write may itself be partial). Returns True if a recovery
-    happened. Run before reading a table whose compaction job may have
-    died; a healthy path is never touched."""
-    import os
-    import shutil
-
-    old = f"{path}.old"
-    if not os.path.isdir(path) and os.path.isdir(old):
-        os.rename(old, path)
-        tmp = f"{path}.compact-tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # unpublished, possibly partial
-        return True
-    return False
+    commitproto.swap_dir(tmp, path)
 
 
 def read_table(spark: SparkSession, table_name: str) -> DataFrame:
@@ -550,22 +520,25 @@ def expire_partitions(
 
 
 def vacuum_state_artifacts(state_path: str) -> list[str]:
-    """Remove leftover ``<path>.tmp-*`` / ``<path>.old`` directories a
-    crashed epoch swap may have stranded (streaming/app.py's
-    rename-aside protocol). Safe any time the owning stream is
-    stopped: ``.old`` is only meaningful when the main path is MISSING
-    (that recovery runs inside the epoch itself), and tmp dirs are
-    always replaceable. Returns removed paths."""
+    """Remove the tmp and aside directories a crashed
+    :func:`sources.commitproto.swap_dir` may have stranded beside
+    ``state_path`` (``commitproto.tmp_dir`` / ``aside_dir`` names).
+    Safe any time the owning writer is stopped: the aside is only
+    meaningful when the main path is MISSING (``commitproto.recover``
+    restores it), and tmp dirs are always replaceable. Returns removed
+    paths."""
     import glob
     import os
     import shutil
 
+    from pubg_data_pipeline_spark.sources import commitproto
+
     removed = []
-    for d in glob.glob(f"{state_path}.tmp-*"):
+    for d in glob.glob(glob.escape(commitproto.tmp_dir(state_path, "")) + "*"):
         if os.path.isdir(d):
             shutil.rmtree(d)
             removed.append(d)
-    old = f"{state_path}.old"
+    old = commitproto.aside_dir(state_path)
     if os.path.isdir(state_path) and os.path.isdir(old):
         shutil.rmtree(old)
         removed.append(old)
@@ -838,7 +811,7 @@ def warehouse_fsck(root: str, max_findings: int = 10_000) -> list[dict]:
       in-flight publish that never renamed (jsonl sink tasks, manifest
       swaps, state compactions).
     - ``aside_orphan``: ``*.old`` directories — a rename-aside swap
-      whose recovery hasn't run (streaming/app.py protocol; readers
+      whose recovery hasn't run (``commitproto.swap_dir``; readers
       self-heal, but residue past a few epochs means no reader ran).
     - ``uncommitted_parquet``: a directory containing parquet part
       files but NO ``_SUCCESS`` marker — a dead Spark write job
@@ -865,9 +838,9 @@ def warehouse_fsck(root: str, max_findings: int = 10_000) -> list[dict]:
     def _is_tmp(name: str) -> bool:
         # every tmp spelling the engine's protocols produce:
         #   *.tmp            (manifest swaps: io.py, plans/base.py)
-        #   *.tmp-<epoch>    (state epoch publishes: streaming/app.py)
-        #   *.tmp-compact    (state compactions: streaming/app.py)
-        #   *-tmp            (compact_parquet's {path}.compact-tmp)
+        #   .<base>.tmp-<tag> (commitproto.swap_dir tmp dirs: epoch
+        #                    ids, "compact", "commit")
+        #   *-tmp            (compact_parquet's former {path}.compact-tmp)
         #   .tmp-<uuid>.*    (jsonl sink task files)
         return (
             name.endswith(".tmp")

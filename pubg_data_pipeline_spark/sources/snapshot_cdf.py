@@ -79,6 +79,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from pubg_data_pipeline_spark.sources.commitproto import require_local_path
+
 #: Metadata columns every CDF row carries (Delta CDF's column names).
 META_COLS = ("_change_type", "_commit_version")
 
@@ -150,12 +152,11 @@ class _FilePartition(InputPartition):
 
 class SnapshotCdfStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options):
-        self.table_path = options["path"]
-        if "://" in self.table_path:
-            raise ValueError(
-                "snapshot_cdf tails a local/shared-filesystem snapshot table; "
-                f"got remote URI {self.table_path!r}"
-            )
+        self.table_path = require_local_path(
+            options["path"],
+            "snapshot_cdf (tails a snapshot table)",
+            "tail it from a local or shared filesystem.",
+        )
         self.mdir = os.path.join(self.table_path, "_manifests")
         self.field_names = [f.name for f in schema.fields]
         self.data_fields = [n for n in self.field_names if n not in META_COLS]

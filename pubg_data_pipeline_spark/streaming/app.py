@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from pubg_data_pipeline_spark.plans import analytics
+from pubg_data_pipeline_spark.sources import commitproto
 from pubg_data_pipeline_spark.streaming import etl, sinks
 
 
@@ -29,35 +30,11 @@ def _require_local_path(path: str, what: str) -> None:
     (Delta/Iceberg MERGE INTO / epoch-partitioned commits) — the
     Spark plan inside each epoch is identical, only the commit
     mechanism changes."""
-    if "://" in path:
-        raise ValueError(
-            f"{what} maintains state with local-filesystem swaps; got a remote "
-            f"URI {path!r}. Deploy against a transactional table format for "
-            "object-store/HDFS paths."
-        )
-
-
-def _recover_renamed_aside(path: str) -> None:
-    """Crash recovery for the rename-aside swap protocol: if a crash
-    landed between `path -> path.old` and `tmp -> path`, the previous
-    state survives at ``path.old`` — restore it before this epoch
-    reads. A valid ``path`` is never overwritten.
-
-    Race tolerance: a concurrent recoverer (two readers hitting the
-    same crashed state) or an in-flight compactor mid-swap can win the
-    rename first — losing the race is FINE as long as ``path`` exists
-    afterwards, so OSError is swallowed iff the state reappeared.
-    Compaction itself is still a single-maintainer operation (don't
-    run two compactors on one state path)."""
-    import os
-
-    old = f"{path}.old"
-    if not os.path.isdir(path) and os.path.isdir(old):
-        try:
-            os.rename(old, path)
-        except OSError:
-            if not os.path.isdir(path):
-                raise  # genuinely stuck, not a lost recovery race
+    commitproto.require_local_path(
+        path,
+        what,
+        "deploy against a transactional table format for object-store/HDFS paths.",
+    )
 
 
 def streaming_etl(
@@ -181,12 +158,11 @@ def rollup_merge_epoch(
     """
     import json
     import os
-    import shutil
 
     from pubg_data_pipeline_spark.operators import incremental
 
     _require_local_path(state_path, "rollup_merge_epoch")
-    _recover_renamed_aside(state_path)
+    commitproto.recover(state_path)
     marker = os.path.join(state_path, "_last_epoch")
     if os.path.isfile(marker):
         with open(marker) as f:
@@ -203,21 +179,11 @@ def rollup_merge_epoch(
         merged = incremental.merge_hourly_states(prev, partial)
     else:
         merged = partial
-    tmp = f"{state_path}.tmp-{epoch_id}"
-    aside = f"{state_path}.old"
+    tmp = commitproto.tmp_dir(state_path, epoch_id)
     merged.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_last_epoch"), "w") as f:
         json.dump({"epoch": int(epoch_id)}, f)
-    # rename-aside swap: at no instant is the only copy of the state
-    # deleted; _recover_renamed_aside restores `.old` after a crash
-    # between the two renames.
-    if os.path.isdir(state_path):
-        if os.path.isdir(aside):
-            shutil.rmtree(aside)
-        os.rename(state_path, aside)
-    os.rename(tmp, state_path)
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)
+    commitproto.swap_dir(tmp, state_path)
 
 
 def incremental_rollup_stream(
@@ -334,7 +300,7 @@ def ingest_dedup_epoch(
 
     _require_local_path(index_path, "ingest_dedup_epoch")
     _require_local_path(corpus_path, "ingest_dedup_epoch")
-    _recover_renamed_aside(index_path)  # crashed compaction -> index at .old
+    commitproto.recover(index_path)  # a crashed compaction left the index aside
     if batch_df.isEmpty():
         return  # idle trigger: skip the O(index) scan and empty writes
     spark = batch_df.sparkSession
@@ -450,7 +416,7 @@ def ingest_neardup_epoch(
 
     _require_local_path(index_path, "ingest_neardup_epoch")
     _require_local_path(corpus_path, "ingest_neardup_epoch")
-    _recover_renamed_aside(index_path)  # crashed compaction -> index at .old
+    commitproto.recover(index_path)  # a crashed compaction left the index aside
     if batch_df.isEmpty():
         return  # idle trigger: skip the O(index) scan and empty writes
     spark = batch_df.sparkSession
@@ -547,29 +513,32 @@ def dim_upsert_epoch(
     idempotent under foreachBatch's at-least-once replays. The merged
     state is materialized (eager localCheckpoint) before the tmp
     write so the swap never races a recomputation against the
-    directory being replaced, and the swap itself is the rename-aside
-    protocol (dim -> dim.old, tmp -> dim, drop dim.old) with crash
-    recovery at epoch start — no window in which the only copy of the
-    dimension is deleted. Local filesystem only (see
+    directory being replaced, and the swap itself is
+    ``commitproto.swap_dir`` (move dim aside, rename tmp onto dim, drop
+    the aside) with crash recovery at epoch start — no window in which
+    the only copy of the dimension is deleted. Local filesystem only (see
     ``_require_local_path``); a cluster deployment targets a
     transactional table format's MERGE INTO with the identical plan.
     """
     import os
-    import shutil
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     _require_local_path(dim_path, "dim_upsert_epoch")
     spark = batch_df.sparkSession
-    _recover_renamed_aside(dim_path)
+    commitproto.recover(dim_path)
     if batch_df.isEmpty():
         # nothing to merge; also avoids materializing a fileless empty
         # table on the very first epoch (unreadable by schema inference)
         return
     upd = batch_df.withColumn("__src", F.lit(1))
     if os.path.isdir(dim_path):
-        base = spark.read.parquet(dim_path).withColumn("__src", F.lit(0))
+        # the stored dimension has the batch's schema; declaring it
+        # skips the footer-reading schema-inference job on every epoch
+        base = spark.read.schema(batch_df.schema).parquet(dim_path).withColumn(
+            "__src", F.lit(0)
+        )
         unioned = base.unionByName(upd)
     else:
         unioned = upd
@@ -582,16 +551,9 @@ def dim_upsert_epoch(
         .drop("__rn", "__src")
     )
     merged = merged.localCheckpoint()
-    tmp = f"{dim_path}.tmp-{epoch_id}"
-    old = f"{dim_path}.old"
+    tmp = commitproto.tmp_dir(dim_path, epoch_id)
     merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(dim_path):
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(dim_path, old)
-    os.rename(tmp, dim_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    commitproto.swap_dir(tmp, dim_path)
 
 
 def streaming_dim_upsert(
@@ -671,34 +633,26 @@ def topk_search_epoch(
     the stored state is k rows per query regardless of corpus size.
     Same rename-aside swap + recovery as the other state sinks."""
     import os
-    import shutil
 
     from pubg_data_pipeline_spark.operators import similarity
 
     _require_local_path(state_path, "topk_search_epoch")
     spark = batch_df.sparkSession
-    _recover_renamed_aside(state_path)
+    commitproto.recover(state_path)
     if batch_df.isEmpty():
         return
     batch_topk = similarity.brute_force_top_k(
         batch_df, queries_df, id_col=id_col, vec_col=vec_col, k=k, round_digits=6
     )
     if os.path.isdir(state_path):
-        prev = spark.read.parquet(state_path)
+        prev = spark.read.schema(batch_topk.schema).parquet(state_path)
         merged = similarity.merge_topk_states(prev, batch_topk, k=k)
     else:
         merged = batch_topk
     merged = merged.localCheckpoint()
-    tmp = f"{state_path}.tmp-{epoch_id}"
-    aside = f"{state_path}.old"
+    tmp = commitproto.tmp_dir(state_path, epoch_id)
     merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(state_path):
-        if os.path.isdir(aside):
-            shutil.rmtree(aside)
-        os.rename(state_path, aside)
-    os.rename(tmp, state_path)
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)
+    commitproto.swap_dir(tmp, state_path)
 
 
 def streaming_topk_search(
@@ -735,7 +689,7 @@ def _epoch_table(spark, path: str, before_epoch: int, template: DataFrame) -> Da
 
     from pyspark.sql import functions as F
 
-    _recover_renamed_aside(path)  # crashed compaction left state at .old
+    commitproto.recover(path)  # a crashed compaction left the state aside
     has_files = os.path.isdir(path) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
     )
@@ -868,8 +822,8 @@ def heavy_hitters_epoch(
     from pubg_data_pipeline_spark.operators import incremental
 
     _require_local_path(state_path, "heavy_hitters_epoch")
-    _recover_renamed_aside(f"{state_path}/summary")
-    _recover_renamed_aside(f"{state_path}/totals")
+    commitproto.recover(f"{state_path}/summary")
+    commitproto.recover(f"{state_path}/totals")
     summary, n_rows = incremental.partial_mg_state(batch_df, key_cols, counters)
     if n_rows == 0:
         return  # idle trigger
@@ -885,29 +839,22 @@ def heavy_hitters_epoch(
 
 def _commit_epoch_partition(table, root: str, epoch_id: int) -> None:
     """Make ``table`` the whole ``root/__epoch=N`` partition: write one
-    parquet file into ``.__epoch=N.tmp``, move a previous partition
-    aside, rename the temp dir into place, drop the old copy. Dot
-    prefixes keep both side dirs out of every reader's listing; a
-    leftover from a crash is cleared by the next commit of the epoch."""
+    parquet file into a temp dir and swap it in (commitproto.swap_dir).
+    The side dirs' dot prefixes keep them out of every reader's listing
+    of ``root``; a leftover from a crash is cleared or restored by the
+    next commit of the epoch."""
     import os
     import shutil
 
     import pyarrow.parquet as pq
 
-    name = f"__epoch={int(epoch_id)}"
-    part = os.path.join(root, name)
-    tmp = os.path.join(root, f".{name}.tmp")
-    aside = os.path.join(root, f".{name}.old")
-    for d in (tmp, aside):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    part = os.path.join(root, f"__epoch={int(epoch_id)}")
+    tmp = commitproto.tmp_dir(part, "commit")
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
     os.makedirs(tmp)
     pq.write_table(table, os.path.join(tmp, "part-00000.snappy.parquet"))
-    if os.path.isdir(part):
-        os.rename(part, aside)
-    os.rename(tmp, part)
-    if os.path.isdir(aside):
-        shutil.rmtree(aside)
+    commitproto.swap_dir(tmp, part)
 
 
 def read_heavy_hitters(
@@ -922,8 +869,8 @@ def read_heavy_hitters(
 
     from pubg_data_pipeline_spark.operators import incremental
 
-    _recover_renamed_aside(f"{state_path}/summary")
-    _recover_renamed_aside(f"{state_path}/totals")
+    commitproto.recover(f"{state_path}/summary")
+    commitproto.recover(f"{state_path}/totals")
     summary = spark.read.parquet(f"{state_path}/summary").drop("__epoch")
     totals = spark.read.parquet(f"{state_path}/totals")
     merged = incremental.merge_mg_states([summary], counters)
@@ -967,16 +914,13 @@ def compact_heavy_hitters(spark, state_path: str, key_cols: list[str], counters:
     streaming checkpoint's retention: a replay of a compacted-away
     epoch would re-append it. Keeps read cost O(counters) instead of
     O(epochs x counters) on long-lived stores."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pubg_data_pipeline_spark.operators import incremental
 
     _require_local_path(state_path, "compact_heavy_hitters")
-    _recover_renamed_aside(f"{state_path}/summary")
-    _recover_renamed_aside(f"{state_path}/totals")
+    commitproto.recover(f"{state_path}/summary")
+    commitproto.recover(f"{state_path}/totals")
     summary = spark.read.parquet(f"{state_path}/summary").drop("__epoch")
     merged = incremental.merge_mg_states([summary], counters).withColumn(
         "__epoch", F.lit(0)
@@ -988,14 +932,10 @@ def compact_heavy_hitters(spark, state_path: str, key_cols: list[str], counters:
         .localCheckpoint()
     )
     for df, sub in ((merged, "summary"), (total, "totals")):
-        tmp = f"{state_path}/{sub}.tmp-compact"
-        old = f"{state_path}/{sub}.old"
+        target = f"{state_path}/{sub}"
+        tmp = commitproto.tmp_dir(target, "compact")
         df.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(f"{state_path}/{sub}", old)
-        os.rename(tmp, f"{state_path}/{sub}")
-        shutil.rmtree(old)
+        commitproto.swap_dir(tmp, target)
 
 
 def span_flag_epoch(
@@ -1116,13 +1056,10 @@ def compact_gram_index(spark, index_path: str) -> None:
     decisions are unchanged). Run only for epochs older than the
     streaming checkpoint's retention — a replay of a compacted-away
     epoch would double-count its grams."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     _require_local_path(index_path, "compact_gram_index")
-    _recover_renamed_aside(index_path)
+    commitproto.recover(index_path)
     merged = (
         spark.read.parquet(index_path)
         .groupBy("gram")
@@ -1130,14 +1067,9 @@ def compact_gram_index(spark, index_path: str) -> None:
         .withColumn("__epoch", F.lit(0))
         .localCheckpoint()
     )
-    tmp = f"{index_path}.tmp-compact"
-    old = f"{index_path}.old"
+    tmp = commitproto.tmp_dir(index_path, "compact")
     merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
+    commitproto.swap_dir(tmp, index_path)
 
 
 def compact_ingest_index(spark, index_path: str, key_cols: list[str]) -> None:
@@ -1161,13 +1093,10 @@ def compact_ingest_index(spark, index_path: str, key_cols: list[str]) -> None:
     there and in the compacted base (harmless for membership, but the
     keeper_id uniqueness invariant degrades to first-wins-on-read).
     Crash-safe via the same rename-aside swap."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     _require_local_path(index_path, "compact_ingest_index")
-    _recover_renamed_aside(index_path)
+    commitproto.recover(index_path)
     merged = (
         spark.read.parquet(index_path)
         .groupBy(*key_cols)
@@ -1175,14 +1104,9 @@ def compact_ingest_index(spark, index_path: str, key_cols: list[str]) -> None:
         .withColumn("__epoch", F.lit(0))
         .localCheckpoint()
     )
-    tmp = f"{index_path}.tmp-compact"
-    old = f"{index_path}.old"
+    tmp = commitproto.tmp_dir(index_path, "compact")
     merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
+    commitproto.swap_dir(tmp, index_path)
 
 
 # ------------------------------------------------------------------
@@ -1440,7 +1364,7 @@ def cms_epoch(
     the CMS answers point lookups — "how often did THIS key occur" —
     for keys known only at query time, in the same bounded state."""
     _require_local_path(state_path, "cms_epoch")
-    _recover_renamed_aside(f"{state_path}/grid")
+    commitproto.recover(f"{state_path}/grid")
     if batch_df.isEmpty():
         return
 
@@ -1474,7 +1398,7 @@ def read_cms_estimates(
     exactly as in the batch operator."""
     from pubg_data_pipeline_spark.operators import sketches
 
-    _recover_renamed_aside(f"{state_path}/grid")
+    commitproto.recover(f"{state_path}/grid")
     merged = sketches.count_min_merge(
         spark.read.parquet(f"{state_path}/grid").drop("__epoch")
     )
@@ -1509,15 +1433,12 @@ def compact_cms(spark, state_path: str) -> None:
     counter addition is associative, so every subsequent estimate is
     unchanged while the stored state drops from O(epochs * k * w) to
     O(k * w)."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pubg_data_pipeline_spark.operators import sketches
 
     _require_local_path(state_path, "compact_cms")
-    _recover_renamed_aside(f"{state_path}/grid")
+    commitproto.recover(f"{state_path}/grid")
     merged = (
         sketches.count_min_merge(
             spark.read.parquet(f"{state_path}/grid").drop("__epoch")
@@ -1525,19 +1446,10 @@ def compact_cms(spark, state_path: str) -> None:
         .withColumn("__epoch", F.lit(0))
         .localCheckpoint()
     )
-    # crash-safe swap (same sequence as compact_gram_index): write the
-    # replacement aside, move the live dir out of the way, rename the
-    # replacement in, THEN delete the old state — a crash at any point
-    # leaves either the old or the new grid recoverable on disk
     target = f"{state_path}/grid"
-    tmp = f"{target}.tmp-compact"
-    old = f"{target}.old"
+    tmp = commitproto.tmp_dir(target, "compact")
     merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old)
+    commitproto.swap_dir(tmp, target)
 
 
 def moments_epoch(

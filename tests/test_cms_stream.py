@@ -75,11 +75,11 @@ def test_cms_read_recovers_from_crashed_compaction(spark, tmp_path):
     state = tmp_path / "cms_state"
     app.cms_epoch(spark.createDataFrame([(5,)] * 12, "k long"), 0, str(state), "k")
     # simulate a crash between the two renames of compact_cms: the
-    # only copy of the grid sits at grid.old
-    os.rename(f"{state}/grid", f"{state}/grid.old")
+    # only copy of the grid sits at .grid.old
+    os.rename(f"{state}/grid", f"{state}/.grid.old")
     assert _probe(spark, state, [5]) == {5: 12}  # reader restored it
     # and a subsequent epoch write also recovers rather than starting a
-    # fresh history next to the orphaned .old
-    os.rename(f"{state}/grid", f"{state}/grid.old")
+    # fresh history next to the orphaned aside
+    os.rename(f"{state}/grid", f"{state}/.grid.old")
     app.cms_epoch(spark.createDataFrame([(5,)] * 3, "k long"), 1, str(state), "k")
     assert _probe(spark, state, [5]) == {5: 15}

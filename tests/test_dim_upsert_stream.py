@@ -138,7 +138,7 @@ def test_dim_upsert_late_change_cannot_regress(spark, tmp_path):
 
 
 def test_dim_upsert_recovers_from_crash_between_renames(spark, tmp_path):
-    """Simulate a crash after `dim -> dim.old` but before
+    """Simulate a crash after `dim -> .dim.old` but before
     `tmp -> dim`: the next epoch must restore the previous state, not
     rebuild from the micro-batch alone."""
     import os
@@ -148,14 +148,14 @@ def test_dim_upsert_recovers_from_crash_between_renames(spark, tmp_path):
         spark.createDataFrame([("a", 1, "x"), ("b", 1, "y")], "k string, ver long, v string"),
         0, str(dim), ["k"], "ver",
     )
-    os.rename(str(dim), str(dim) + ".old")  # the crash window
+    os.rename(str(dim), str(tmp_path / ".dim.old"))  # the crash window
     app.dim_upsert_epoch(
         spark.createDataFrame([("c", 1, "z")], "k string, ver long, v string"),
         1, str(dim), ["k"], "ver",
     )
     out = {r["k"]: r["v"] for r in spark.read.parquet(str(dim)).collect()}
     assert out == {"a": "x", "b": "y", "c": "z"}  # nothing lost
-    assert not os.path.isdir(str(dim) + ".old")   # aside cleaned up
+    assert not os.path.isdir(str(tmp_path / ".dim.old"))   # aside cleaned up
 
 
 def test_epoch_sinks_reject_remote_uris(spark):

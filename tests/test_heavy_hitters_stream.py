@@ -218,6 +218,56 @@ def test_epoch_replay_leaves_one_data_file(spark, tmp_path):
     ]
 
 
+def test_epoch_replay_after_crash_in_commit_swap(spark, tmp_path, monkeypatch):
+    """A replay of epoch 1 crashes inside _commit_epoch_partition's swap
+    (each of its four renames in turn: totals aside, totals in, summary
+    aside, summary in); replaying the epoch again must give exactly the
+    answer of a run that never crashed, with no side dir left."""
+    import pytest
+
+    from pubg_data_pipeline_spark.sources.io import warehouse_fsck
+
+    batches = [
+        spark.createDataFrame(
+            [("a",)] * (30 + 10 * e) + [("b",)] * 12 + [(f"e{e}_{i}",) for i in range(20)],
+            "k string",
+        )
+        for e in range(2)
+    ]
+
+    def answer(state):
+        return sorted(
+            tuple(r) for r in app.read_heavy_hitters(spark, state, ["k"], counters=4).collect()
+        )
+
+    clean = str(tmp_path / "clean")
+    for eid, batch in enumerate(batches):
+        app.heavy_hitters_epoch(batch, eid, clean, ["k"], counters=4)
+    want = answer(clean)
+
+    real = os.rename
+    for fail_on in (1, 2, 3, 4):
+        state = str(tmp_path / f"crash{fail_on}")
+        for eid, batch in enumerate(batches):
+            app.heavy_hitters_epoch(batch, eid, state, ["k"], counters=4)
+        calls = []
+
+        def rename(src, dst, calls=calls, fail_on=fail_on):
+            calls.append(dst)
+            if len(calls) == fail_on:
+                raise OSError("injected crash")
+            real(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected crash"):
+            app.heavy_hitters_epoch(batches[1], 1, state, ["k"], counters=4)
+        monkeypatch.undo()
+        app.heavy_hitters_epoch(batches[1], 1, state, ["k"], counters=4)
+        assert answer(state) == want, f"crash at rename {fail_on}"
+        residue = [f for f in warehouse_fsck(state) if f["kind"] in ("tmp_orphan", "aside_orphan")]
+        assert residue == [], residue
+
+
 def _group_jobs(spark, group, fn):
     """Run ``fn`` in its own job group; return its job ids and the
     subset that ran outside any SQL execution. A parquet read without a
@@ -268,3 +318,26 @@ def test_epoch_job_counts(spark, tmp_path):
     _, outside = _group_jobs(spark, "ingest-epoch", lambda: app.ingest_dedup_epoch(
         docs.selectExpr("doc_id + 100 AS doc_id", "text"), 1, index, corpus))
     assert not outside, f"ingest epoch started jobs outside a query: {outside}"
+
+
+def test_dim_and_topk_epochs_read_state_with_declared_schema(spark, tmp_path):
+    """Pins: dim-upsert and top-k epochs over existing state read it
+    with the batch's schema, so neither starts a job outside a query."""
+    dim = str(tmp_path / "dim")
+    changes = spark.range(50).selectExpr("CAST(id % 20 AS STRING) AS k", "id AS ver")
+    app.dim_upsert_epoch(changes, 0, dim, ["k"], "ver")
+    _, outside = _group_jobs(spark, "dim-epoch", lambda: app.dim_upsert_epoch(
+        changes.selectExpr("k", "ver + 100 AS ver"), 1, dim, ["k"], "ver"))
+    assert not outside, f"dim-upsert epoch started jobs outside a query: {outside}"
+
+    def vecs(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS vec_id", "array(sin(id), cos(id), sin(id * 0.5)) AS embedding"
+        )
+
+    topk = str(tmp_path / "topk")
+    queries = vecs(1000, 1002)
+    app.topk_search_epoch(vecs(0, 30), 0, queries, topk, k=3)
+    _, outside = _group_jobs(spark, "topk-epoch", lambda: app.topk_search_epoch(
+        vecs(30, 60), 1, queries, topk, k=3))
+    assert not outside, f"top-k epoch started jobs outside a query: {outside}"

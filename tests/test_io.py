@@ -417,17 +417,42 @@ def test_vacuum_state_artifacts(spark, tmp_path):
     state = tmp_path / "state"
     state.mkdir()
     (state / "x").write_text("live")
-    tmp1 = tmp_path / "state.tmp-7"
+    tmp1 = tmp_path / ".state.tmp-7"
     tmp1.mkdir()
-    old = tmp_path / "state.old"
+    old = tmp_path / ".state.old"
     old.mkdir()
     removed = sio.vacuum_state_artifacts(str(state))
     assert len(removed) == 2
     assert os.path.isdir(str(state)) and not os.path.isdir(str(tmp1)) and not os.path.isdir(str(old))
-    # .old is PRESERVED when the main path is missing (recovery needs it)
-    os.rename(str(state), str(tmp_path / "state.old"))
+    # the aside is PRESERVED when the main path is missing (recovery needs it)
+    os.rename(str(state), str(tmp_path / ".state.old"))
     assert sio.vacuum_state_artifacts(str(state)) == []
-    assert os.path.isdir(str(tmp_path / "state.old"))
+    assert os.path.isdir(str(tmp_path / ".state.old"))
+
+
+def test_vacuum_removes_crashed_compaction_tmp(spark, tmp_path, monkeypatch):
+    """compact_parquet stages its rewrite under the same tmp naming rule
+    as every other swap, so the tmp a crashed compaction strands is
+    found and removed by vacuum_state_artifacts."""
+    import os
+
+    from pubg_data_pipeline_spark.sources import io as sio
+
+    path = str(tmp_path / "tbl")
+    spark.range(100).repartition(4).write.parquet(path)
+
+    def crash(src, dst):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        sio.compact_parquet(spark, path, target_files=1)
+    monkeypatch.undo()
+    assert len(os.listdir(tmp_path)) == 2  # the table and a stranded tmp
+    removed = sio.vacuum_state_artifacts(path)
+    assert len(removed) == 1
+    assert os.listdir(tmp_path) == ["tbl"]
+    assert spark.read.parquet(path).count() == 100
 
 
 def test_propagate_deletes_removes_escaped_partition_dirs(spark, tmp_path):
@@ -532,19 +557,22 @@ def test_jsonl_export_roundtrip_sharded_and_checksummed(spark, tmp_path):
 
 def test_compaction_crash_is_recoverable(spark, tmp_path):
     """compact_parquet's rename-aside swap: simulate a crash between
-    the two renames (table at .old, fresh copy stranded at
-    .compact-tmp) — recover_compacted restores the original and drops
-    the unpublished tmp."""
+    the two renames (table aside, fresh copy stranded at its tmp) —
+    commitproto.recover restores the original and vacuum_state_artifacts
+    drops the unpublished tmp."""
     import os
 
+    from pubg_data_pipeline_spark.sources import commitproto
     from pubg_data_pipeline_spark.sources import io as sio
 
     path = str(tmp_path / "tbl")
+    tmp = commitproto.tmp_dir(path, "compact")
     spark.range(100).write.parquet(path)
-    spark.range(100).repartition(1).write.parquet(f"{path}.compact-tmp")
-    os.rename(path, f"{path}.old")  # the crash window state
+    spark.range(100).repartition(1).write.parquet(tmp)
+    os.rename(path, commitproto.aside_dir(path))  # the crash window state
 
-    assert sio.recover_compacted(path) is True
+    assert commitproto.recover(path) is True
     assert spark.read.parquet(path).count() == 100
-    assert not os.path.isdir(f"{path}.compact-tmp")
-    assert sio.recover_compacted(path) is False  # healthy -> no-op
+    assert sio.vacuum_state_artifacts(path) == [tmp]
+    assert not os.path.isdir(tmp)
+    assert commitproto.recover(path) is False  # healthy -> no-op
