@@ -34,6 +34,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pubg_data_pipeline_spark.operators.ckpt import checkpoint
+
 # ------------------------------------------------------------------
 # pure-Python reference (tests pin the distributed paths against it)
 
@@ -137,7 +139,7 @@ def train_bpe(
     driver row (tie-broken count desc / pair asc, matching
     `train_bpe_local` exactly), and the merge is applied to the symbol
     column as a Catalyst fold (`_merge_pair_col`). The vocab DataFrame
-    is localCheckpoint'ed every few rounds so lineage doesn't stack
+    is checkpointed every few rounds so lineage doesn't stack
     ``num_merges`` fold expressions deep.
     """
     df = vocab.filter(F.length(word_col) >= 2).select(
@@ -151,7 +153,7 @@ def train_bpe(
     # materialize the vocabulary ONCE: every round runs one job, and
     # without this each job would re-aggregate the corpus token stream
     # down to the vocab (num_merges full corpus scans instead of one)
-    df = df.localCheckpoint(eager=True)
+    df, _ = checkpoint(df)
     merges: list[tuple[str, str]] = []
     for i in range(num_merges):
         pairs = df.select(
@@ -178,7 +180,7 @@ def train_bpe(
         merges.append((a, b))
         df = df.select("__c", _merge_pair_col(F.col("__syms"), a, b).alias("__syms"))
         if (i + 1) % checkpoint_every == 0:
-            df = df.localCheckpoint(eager=True)
+            df, _ = checkpoint(df)
     return merges
 
 

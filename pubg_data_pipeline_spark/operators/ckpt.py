@@ -2,8 +2,8 @@
 
 A subtree referenced more than once in a query plan re-executes once
 per reference: AQE in Spark 4.1.2 never emits ReusedExchange for
-duplicated subtrees (verified with minimal repros in
-scripts/probe_r08b_multiscans.py), so the standard fix is a
+duplicated subtrees (verified with minimal repros, see
+OPTIMIZATION_r08.md:426), so the standard fix is a
 checkpoint barrier the first consumer's own action materializes.
 This module centralizes that barrier and fixes its two lifecycle
 problems:
@@ -27,7 +27,9 @@ problems:
    reliable ``DataFrame.checkpoint`` into that directory instead —
    executor-loss tolerant at the cost of one distributed write. The
    local default stays localCheckpoint: fastest, and executor loss
-   does not exist in local mode.
+   does not exist in local mode. :func:`checkpoint` is the only
+   place that makes this choice; every eager or lazy lineage cut in
+   ``operators/``, ``plans/`` and ``functions/`` goes through it.
 """
 
 from __future__ import annotations
@@ -77,6 +79,27 @@ def reliable_checkpoint_dir() -> str | None:
     return os.environ.get(_CHECKPOINT_DIR_ENV) or None
 
 
+def checkpoint(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
+    """Cut ``df``'s lineage: a reliable ``DataFrame.checkpoint`` into
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` when it is set (the directory is
+    installed once per session), otherwise ``localCheckpoint``.
+
+    Returns the checkpointed frame and the block-manager RDD ids the
+    checkpoint registered, the handle :func:`release_rdds` takes once
+    the frame is dead. Reliable checkpoints register no blocks, so
+    their set is empty."""
+    spark = df.sparkSession
+    before = persisted_rdd_ids(spark)
+    ckpt_dir = reliable_checkpoint_dir()
+    if ckpt_dir is None:
+        out = df.localCheckpoint(eager=eager)
+    else:
+        if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+            spark.sparkContext.setCheckpointDir(ckpt_dir)
+        out = df.checkpoint(eager=eager)
+    return out, persisted_rdd_ids(spark) - before
+
+
 def barrier(df: DataFrame, site: str, eager: bool = False) -> DataFrame:
     """Checkpoint ``df`` as a materialize-once barrier.
 
@@ -89,20 +112,10 @@ def barrier(df: DataFrame, site: str, eager: bool = False) -> DataFrame:
     zero extra jobs; ``eager=True`` materializes now (use when the
     barrier must exist before fan-out to independently-executed
     consumers)."""
-    spark = df.sparkSession
-    ckpt_dir = reliable_checkpoint_dir()
-    if ckpt_dir is not None:
-        if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-            spark.sparkContext.setCheckpointDir(ckpt_dir)
-        # reliable checkpoints write to the fault-tolerant dir and
-        # register no block-manager blocks — nothing to supersede
-        return df.checkpoint(eager=eager)
-    before = persisted_rdd_ids(spark)
-    out = df.localCheckpoint(eager=eager)
-    ids = persisted_rdd_ids(spark) - before
-    key = (spark.sparkContext.applicationId, site)
-    stale = _SITE_BLOCKS.get(key)
-    if stale:
-        release_rdds(spark, stale)
-    _SITE_BLOCKS[key] = ids
+    out, ids = checkpoint(df, eager)
+    if ids:  # reliable checkpoints leave nothing to supersede
+        spark = df.sparkSession
+        key = (spark.sparkContext.applicationId, site)
+        release_rdds(spark, _SITE_BLOCKS.get(key, set()))
+        _SITE_BLOCKS[key] = ids
     return out

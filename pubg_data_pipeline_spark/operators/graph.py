@@ -47,13 +47,9 @@ from pyspark.sql import functions as F
 # verified: the persistent-RDD count is unchanged after
 # df.unpersist()), so superseded per-round checkpoints must be
 # released through the block manager's own registry or they
-# accumulate for the process lifetime. The helpers live in ckpt.py
-# (shared with every plan-level barrier site).
-from pubg_data_pipeline_spark.operators.ckpt import (
-    persisted_rdd_ids as _persisted_rdd_ids,
-    release_rdds as _release_rdds,
-    reliable_checkpoint_dir,
-)
+# accumulate for the process lifetime. ckpt.checkpoint returns the
+# ids each checkpoint registered for exactly that release.
+from pubg_data_pipeline_spark.operators.ckpt import checkpoint, release_rdds
 
 #: Edge lists of at most this many rows are collected and labeled on
 #: the driver (two id columns, about 8 MB of Arrow for longs). The
@@ -62,25 +58,11 @@ from pubg_data_pipeline_spark.operators.ckpt import (
 _DRIVER_MAX_EDGES = 500_000
 
 
-def _ckpt_eager(df: DataFrame) -> DataFrame:
-    """Eager lineage barrier honoring the cluster escape hatch: with
-    SPARK_GRAFT_CHECKPOINT_DIR set, a reliable DataFrame.checkpoint
-    (executor-loss tolerant); otherwise the fast executor-local one."""
-    d = reliable_checkpoint_dir()
-    if d is None:
-        return df.localCheckpoint(eager=True)
-    spark = df.sparkSession
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        spark.sparkContext.setCheckpointDir(d)
-    return df.checkpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     ``component`` is the minimum node id in the node's connected
@@ -94,33 +76,13 @@ def connected_components(
     the driver (one bounded collect, see :func:`_driver_components`);
     larger ones run the distributed loop.
 
-    ``checkpoint_dir``: by default rounds truncate lineage with
-    ``localCheckpoint`` — executor-local blocks, right for local mode
-    and fastest, but NOT executor-loss tolerant (a lost executor's
-    cached blocks cannot be recomputed once lineage is truncated). On
-    a real cluster pass a fault-tolerant directory (HDFS/S3) and each
-    round checkpoints there via ``sparkContext.setCheckpointDir`` +
-    ``DataFrame.checkpoint`` instead, surviving executor loss at the
-    cost of one distributed write per round.
+    Rounds truncate lineage through :func:`ckpt.checkpoint`:
+    executor-local blocks by default, or reliable checkpoints into
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` on a real cluster (executor-loss
+    tolerant, at the cost of one distributed write per round).
     """
 
     spark = edges.sparkSession
-    if checkpoint_dir is None:
-        # cluster escape hatch: a session-level reliable-checkpoint dir
-        # (SPARK_GRAFT_CHECKPOINT_DIR) applies when no explicit dir is
-        # passed, so deployments get executor-loss-tolerant rounds
-        # without touching every call site
-        checkpoint_dir = reliable_checkpoint_dir()
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame, eager: bool) -> tuple[DataFrame, set[int]]:
-        """Checkpoint + the set of RDD ids the checkpoint registered,
-        so superseded rounds can be released (reliable-checkpoint mode
-        registers nothing block-side; its ids set is simply empty)."""
-        before = _persisted_rdd_ids(spark)
-        out = df.checkpoint(eager=eager) if checkpoint_dir is not None else df.localCheckpoint(eager=eager)
-        return out, _persisted_rdd_ids(spark) - before
 
     # Materialize the raw edge projection EAGERLY before symmetrizing:
     # union(e, e.swapped) duplicates the entire upstream subtree in the
@@ -128,13 +90,13 @@ def connected_components(
     # explode + 3 aggregates for the Jaccard case) would be analyzed
     # and executed twice — measured 2x the whole-query cost at sf0.1.
     # After the checkpoint the collect or the union reads cached blocks.
-    e0, e0_ids = _ckpt(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), eager=True)
+    e0, e0_ids = checkpoint(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     schema = e0.select(F.col("a").alias("node"), F.col("a").alias("component")).schema
     # One bounded collect decides the path: a table of at most the
     # bound is the whole graph, so it is labeled on the driver.
     small = e0.limit(_DRIVER_MAX_EDGES + 1).toArrow()
     if small.num_rows <= _DRIVER_MAX_EDGES:
-        _release_rdds(spark, e0_ids)
+        release_rdds(spark, e0_ids)
         return spark.createDataFrame(_driver_components(small), schema)
 
     # Symmetrize, then append one SELF-EDGE (n, n) per node: the
@@ -156,9 +118,8 @@ def connected_components(
     # Partition by "b" — the loop's only join against e keys on b
     # (labels renamed node->b), so the edge side never reshuffles
     # inside the loop; AQE sizes the width from the data.
-    e, _e_ids = _ckpt(
-        sym.unionByName(nodes.select("a", F.col("a").alias("b"))).repartition("b"),
-        eager=True,
+    e, e_ids = checkpoint(
+        sym.unionByName(nodes.select("a", F.col("a").alias("b"))).repartition("b")
     )
     # Initialize at least(node, min_neighbor) — the first half of a
     # propagation round folded into the init aggregate (the
@@ -176,7 +137,7 @@ def connected_components(
     # throws, and legacy NULL sums would fake instant convergence —
     # so they use an exact changed-row probe against the previous
     # labels (limit(1) short-circuits; one small join per round).
-    labels, labels_ids = _ckpt(init, eager=False)
+    labels, labels_ids = checkpoint(init, eager=False)
     numeric_comp = dict(labels.dtypes)["comp"] in (
         "tinyint", "smallint", "int", "bigint",
     ) or dict(labels.dtypes)["comp"].startswith("decimal")
@@ -198,7 +159,7 @@ def connected_components(
     # e0 fed sym, nodes and e; dead weight once e materializes —
     # release its blocks so repeated CC calls in one session don't
     # accumulate checkpoint storage.
-    _release_rdds(spark, e0_ids)
+    release_rdds(spark, e0_ids)
 
     def _jump(frame: DataFrame) -> DataFrame:
         """comp'(n) = comp(comp(n)) — one pointer-jump shortcut.
@@ -236,7 +197,7 @@ def connected_components(
         stepped.persist()
         j1 = _jump(stepped)
         j1.persist()
-        jumped, jumped_ids = _ckpt(_jump(j1), eager=False)
+        jumped, jumped_ids = checkpoint(_jump(j1), eager=False)
         if numeric_comp:
             cur_sum = _label_sum(jumped)
             converged = cur_sum == prev_sum
@@ -257,13 +218,13 @@ def connected_components(
         # blocks back the returned frame and stay)
         stepped.unpersist()
         j1.unpersist()
-        _release_rdds(spark, labels_ids)
+        release_rdds(spark, labels_ids)
         labels, labels_ids = jumped, jumped_ids
         if converged:
             break
     # only the final labels blocks back the returned frame; the edge
     # table is loop-internal
-    _release_rdds(spark, _e_ids)
+    release_rdds(spark, e_ids)
     return labels.select("node", F.col("comp").alias("component"))
 
 
@@ -411,16 +372,13 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     # generation) would otherwise be re-executed once per reference —
     # measured 4x the whole-query cost on the near-dup graph. Same
     # rationale as connected_components' edge checkpoint above.
-    spark = edges.sparkSession
-    before = _persisted_rdd_ids(spark)
-    e0 = _ckpt_eager(
+    e0, e0_ids = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    e0_ids = _persisted_rdd_ids(spark) - before
     und = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     with_deg = _degree_oriented(und)
-    _release_rdds(spark, e0_ids)
+    release_rdds(edges.sparkSession, e0_ids)
     return _wedge_triangles(with_deg)
 
 
@@ -431,7 +389,7 @@ def _degree_oriented(und: DataFrame) -> DataFrame:
     wedge join reads it three times, and the caller may release the
     upstream edge blocks as soon as this returns."""
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    return _ckpt_eager(
+    return checkpoint(
         und.join(deg, "u")
         .join(
             deg.select(F.col("u").alias("v"), F.col("deg").alias("deg_v")),
@@ -442,7 +400,7 @@ def _degree_oriented(und: DataFrame) -> DataFrame:
             | ((F.col("deg") == F.col("deg_v")) & (F.col("u") < F.col("v")))
         )
         .select("u", "v")
-    )
+    )[0]
 
 
 def _wedge_triangles(with_deg: DataFrame) -> DataFrame:
@@ -481,13 +439,10 @@ def clustering_coefficients(
     # triangle join's references — without it an expensive upstream
     # pair pipeline would re-execute per consumer (the same hazard
     # triangles() guards internally; see its comment)
-    spark = edges.sparkSession
-    before = _persisted_rdd_ids(spark)
-    e0 = _ckpt_eager(
+    e0, e0_ids = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    e0_ids = _persisted_rdd_ids(spark) - before
     # Materialize the symmetrized edge list ONCE and share it between
     # the degree table and the orientation (previously this function
     # computed und/deg itself for the coefficient AND called the public
@@ -495,11 +450,11 @@ def clustering_coefficients(
     # scratch for the orientation — one whole union+distinct exchange,
     # one groupBy and one checkpoint materialization of pure double
     # work per execution).
-    und = _ckpt_eager(
+    und, _ = checkpoint(
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
     )
-    _release_rdds(spark, e0_ids)
+    release_rdds(edges.sparkSession, e0_ids)
     deg = und.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
     tri_nodes = (
         _wedge_triangles(_degree_oriented(und))
@@ -554,21 +509,18 @@ def pagerank(
     edge list); undirected edges contribute in both directions, so
     there are no dangling nodes and total rank mass stays 1.
     """
-    spark = edges.sparkSession
-    before = _persisted_rdd_ids(spark)
-    e0 = _ckpt_eager(
+    e0, e0_ids = checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    e0_ids = _persisted_rdd_ids(spark) - before
     und = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-    edges_deg = _ckpt_eager(und.join(deg, "u"))
+    edges_deg, _ = checkpoint(und.join(deg, "u"))
     # e0's blocks fed the eager edges_deg materialization and are dead
     # weight afterwards — release them (via the block-manager registry;
     # DataFrame.unpersist() is a no-op for checkpoint blocks) so
     # repeated pagerank calls don't accumulate checkpoint storage.
-    _release_rdds(spark, e0_ids)
+    release_rdds(edges.sparkSession, e0_ids)
     nodes = edges_deg.select(F.col("u").alias("node")).distinct()
     n = nodes.count()
     if n == 0:

@@ -24,6 +24,8 @@ from pubg_data_pipeline_spark.functions.vectors import (
     cosine,
     dot,
 )
+from pubg_data_pipeline_spark.operators.ckpt import checkpoint
+from pubg_data_pipeline_spark.session import artifact
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -166,17 +168,17 @@ def ml_euclidean_lsh_top_k(
     )
 
 
-# Trained coarse-quantizer centers per cache_key: the IVF index is
-# BUILD-ONCE metadata (nlist × dim floats — kilobytes). Real ANN
-# deployments train offline and serve many queries per build; keying
-# on an explicit caller-provided token keeps the cache honest (no
-# guessing whether two DataFrames are "the same corpus").
-_IVF_CENTERS_CACHE: dict[tuple, list] = {}
-
-# Normalized + cell-assigned corpus per cache_key (eager localCheckpoint)
-# — the IVF sibling of _PQ_INDEX_CACHE: index artifacts are built once
-# per (process, dataset), never per query.
-_IVF_ASSIGNED_CACHE: dict[tuple, DataFrame] = {}
+def _index_artifact(corpus: DataFrame, cache_key: str | None, key: tuple, build):
+    """``build()`` memoized on the corpus's session under ``key`` when
+    the caller names the corpus with ``cache_key``; built every call
+    otherwise. Index artifacts (trained centers and codebooks, the
+    cell-assigned and PQ-coded corpus) are BUILD-ONCE: real ANN
+    deployments train offline and serve many queries per build, and
+    keying on an explicit caller-provided token keeps the memo honest
+    (no guessing whether two DataFrames are "the same corpus")."""
+    return artifact(
+        corpus.sparkSession, None if cache_key is None else (cache_key, *key), build
+    )
 
 
 def _d2_expr(center: Column, v: Column, dim: int | None = None) -> Column:
@@ -500,7 +502,7 @@ def ivf_top_k(
     literal expressions: cell assignment (argmin distance-to-center)
     and probe selection are pure JVM codegen — no MLlib transform in
     the serving path, and with ``cache_key`` set the training job
-    itself runs once per process (index build is offline in any real
+    itself runs once per session (index build is offline in any real
     ANN system; the probe path is what scales per-query). Corpus and
     query vectors are L2-normalized once per ROW so the in-cell
     re-rank is a single dot product per candidate pair. At 100 TB the
@@ -519,34 +521,26 @@ def ivf_top_k(
         "cv",
         dim,
     )
-    key = (cache_key, nlist, seed, dim, balanced)
-    if cache_key is not None and key in _IVF_CENTERS_CACHE:
-        centers = _IVF_CENTERS_CACHE[key]
-    else:
-        centers = (
-            train_ivf_centers_balanced(c, nlist, seed)
-            if balanced
-            else train_ivf_centers(c, nlist, seed)
-        )
-        if cache_key is not None:
-            _IVF_CENTERS_CACHE[key] = centers
+    key = (nlist, seed, dim, balanced)
+    train = train_ivf_centers_balanced if balanced else train_ivf_centers
+    centers = _index_artifact(
+        corpus, cache_key, ("ivf_centers", *key), lambda: train(c, nlist, seed)
+    )
     if not centers:
         return _empty_topk(corpus, queries, id_col)
     # The assigned table is a DERIVED INDEX ARTIFACT (like the PQ codes
-    # table): with cache_key set it is materialized once per (process,
+    # table): with cache_key set it is materialized once per (session,
     # dataset) and every query serves from the checkpointed column.
     # This matters doubly since the cosine fix: ranking cells over the
     # normalize EXPRESSION inlines the transform into every center's
     # distance lambda (measured 5x serving cost vs ranking over a
     # materialized column — the winnowing inlining lesson); the
     # checkpoint restores plain attribute references.
-    if cache_key is not None and key in _IVF_ASSIGNED_CACHE:
-        assigned = _IVF_ASSIGNED_CACHE[key]
-    else:
+    def _assign() -> DataFrame:
         assigned = c.withColumn("cell", _cell_ranking(centers, F.col("cv"))[0]["cell"])
-        if cache_key is not None:
-            assigned = assigned.localCheckpoint(eager=True)
-            _IVF_ASSIGNED_CACHE[key] = assigned
+        return assigned if cache_key is None else checkpoint(assigned)[0]
+
+    assigned = _index_artifact(corpus, cache_key, ("ivf_assigned", *key), _assign)
     return _ivf_probe_and_rerank(assigned, queries, centers, id_col, vec_col, k, nprobe)
 
 
@@ -597,12 +591,6 @@ def lsh_bucketed_top_k(
 
 
 # ---------------------------------------------------------- IVF-PQ
-
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-# (normalized full-vector table, PQ codes table) per (cache_key, ...):
-# the in-memory twin of a persisted IVF-PQ index's two storage tiers.
-_PQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
 
 def train_pq_codebooks(
     corpus_vecs: DataFrame, dim: int, m: int, ksub: int, seed: int = 42
@@ -758,39 +746,35 @@ def ivfpq_top_k(
         "cv",
         dim,
     )
-    ckey = (cache_key, nlist, seed, dim)
-    if cache_key is not None and ckey in _IVF_CENTERS_CACHE:
-        centers = _IVF_CENTERS_CACHE[ckey]
-    else:
-        centers = train_ivf_centers(c, nlist, seed)
-        if cache_key is not None:
-            _IVF_CENTERS_CACHE[ckey] = centers
+    centers = _index_artifact(
+        corpus, cache_key, ("ivf_centers", nlist, seed, dim),
+        lambda: train_ivf_centers(c, nlist, seed),
+    )
     if not centers:
         return _empty_topk(corpus, queries, id_col)
     vectors = c.withColumn("cell", _cell_ranking(centers, F.col("cv"))[0]["cell"])
-    bkey = (cache_key, nlist, m, ksub, seed, dim)
-    if cache_key is not None and bkey in _PQ_BOOKS_CACHE:
-        books = _PQ_BOOKS_CACHE[bkey]
-    else:
-        books = train_pq_codebooks(vectors.select("neighbor_id", "cv"), dim, m, ksub, seed)
-        if cache_key is not None:
-            _PQ_BOOKS_CACHE[bkey] = books
-    # the 100 TB shape: codes table narrow/hot, vector table wide/cold.
-    # Both are DERIVED INDEX ARTIFACTS of a static corpus (built once
-    # at index time, like write_ivf_index's on-disk layout), so with a
-    # cache_key they are materialized once per (process, dataset) and
-    # every subsequent query pays only probe + ADC scan + re-rank —
-    # never corpus re-normalization / re-encoding.
-    if cache_key is not None and bkey in _PQ_INDEX_CACHE:
-        vectors, codes = _PQ_INDEX_CACHE[bkey]
-    else:
+    bkey = (nlist, m, ksub, seed, dim)
+    books = _index_artifact(
+        corpus, cache_key, ("pq_books", *bkey),
+        lambda: train_pq_codebooks(vectors.select("neighbor_id", "cv"), dim, m, ksub, seed),
+    )
+
+    # the 100 TB shape: codes table narrow/hot, vector table wide/cold
+    # (the in-memory twin of a persisted IVF-PQ index's two storage
+    # tiers). Both are DERIVED INDEX ARTIFACTS of a static corpus
+    # (built once at index time, like write_ivf_index's on-disk
+    # layout), so with a cache_key they are materialized once per
+    # (session, dataset) and every subsequent query pays only probe +
+    # ADC scan + re-rank — never corpus re-normalization / re-encoding.
+    def _index() -> tuple[DataFrame, DataFrame]:
         codes = vectors.select(
             "cell", "neighbor_id", pq_codes(books, F.col("cv")).alias("codes")
         )
-        if cache_key is not None:
-            vectors = vectors.localCheckpoint(eager=True)
-            codes = codes.localCheckpoint(eager=True)
-            _PQ_INDEX_CACHE[bkey] = (vectors, codes)
+        if cache_key is None:
+            return vectors, codes
+        return checkpoint(vectors)[0], checkpoint(codes)[0]
+
+    vectors, codes = _index_artifact(corpus, cache_key, ("pq_index", *bkey), _index)
     # normalize BEFORE cell ranking and LUT building — centers and
     # codebooks live in the normalized space (see ivf_top_k)
     q = _l2_normalized(

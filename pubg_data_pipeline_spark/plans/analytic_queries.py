@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pubg_data_pipeline_spark.operators import relational
-from pubg_data_pipeline_spark.plans.base import QuerySpec, exact_scaled, sql_scaled
+from pubg_data_pipeline_spark.plans.base import QuerySpec, disk_cache_path, exact_scaled, sql_scaled
 from pubg_data_pipeline_spark.sources.tables import load_table
 
 
@@ -390,18 +390,14 @@ def customer_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     236-244) give readers no isolation from in-flight writes and no way
     back to yesterday's table; the manifest layer fixes both with one
     atomic file publish per commit."""
-    import os
     import shutil
 
-    from pubg_data_pipeline_spark.plans.base import dataset_cache_tag
     from pubg_data_pipeline_spark.sources import snapshots
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = dataset_cache_tag(sf_dir, "customer")
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(repo_root, ".snap_cache", f"customer_{tag}")
+    path = disk_cache_path(".snap_cache", "customer", sf_dir, "customer")
     if len(snapshots.snapshot_history(path)) < 2:
         # partial state from a crashed setup: data files without a
         # manifest are invisible but would leak — rebuild from scratch

@@ -83,6 +83,18 @@ def dataset_cache_tag(sf_dir: str, *tables: str) -> str:
     return h.hexdigest()[:12]
 
 
+def disk_cache_path(cache_dir: str, name: str, sf_dir: str, table: str) -> str:
+    """``<repo root>/<cache_dir>/<name>_<tag>``: where a persisted
+    per-dataset artifact lives, ``tag`` being the
+    :func:`dataset_cache_tag` of its source ``table``."""
+    import os
+
+    repo_root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    return os.path.join(repo_root, cache_dir, f"{name}_{dataset_cache_tag(sf_dir, table)}")
+
+
 def exact_scaled(col: Column, digits: int = 2) -> Column:
     """Per-row exact fixed-point encoding: round(x * 10^digits) as long.
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pubg_data_pipeline_spark.operators import cdc, relational
-from pubg_data_pipeline_spark.plans.base import QuerySpec, exact_scaled, sql_scaled
+from pubg_data_pipeline_spark.plans.base import QuerySpec, disk_cache_path, exact_scaled, sql_scaled
 from pubg_data_pipeline_spark.sources.tables import load_table
 
 
@@ -303,18 +303,6 @@ WHERE e.event_type = 'error'
 # ------------------------------------------- round 8: lakehouse CDC
 
 
-def _snap_cache_path(name: str, sf_dir: str, table: str) -> str:
-    import os
-
-    from pubg_data_pipeline_spark.plans.base import dataset_cache_tag
-
-    tag = dataset_cache_tag(sf_dir, table)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(repo_root, ".snap_cache", f"{name}_{tag}")
-
-
 def customer_cdf_net_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip the change-data-feed THROUGH a rewrite: a snapshot
     table is built as append(%3==0) -> append(%3==1) -> DELETE WHERE
@@ -338,7 +326,7 @@ def customer_cdf_net_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _snap_cache_path("customer_cdf", sf_dir, "customer")
+    path = disk_cache_path(".snap_cache", "customer_cdf", sf_dir, "customer")
     if len(snapshots.snapshot_history(path)) != 4:
         shutil.rmtree(path, ignore_errors=True)
         snapshots.snapshot_commit(cust.filter(F.col("c_custkey") % 3 == 0), path)
@@ -425,7 +413,7 @@ def customer_snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _snap_cache_path("customer_pruned", sf_dir, "customer")
+    path = disk_cache_path(".snap_cache", "customer_pruned", sf_dir, "customer")
     if len(snapshots.snapshot_history(path)) != 4:
         shutil.rmtree(path, ignore_errors=True)
         # bounded scalars, build-only (the key span; keys start at 0)
@@ -471,7 +459,7 @@ def _dv_table(spark: SparkSession, sf_dir: str) -> str:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _snap_cache_path("customer_dv", sf_dir, "customer")
+    path = disk_cache_path(".snap_cache", "customer_dv", sf_dir, "customer")
     if len(snapshots.snapshot_history(path)) != 4:
         shutil.rmtree(path, ignore_errors=True)
         snapshots.snapshot_commit(cust.filter(F.col("c_custkey") % 2 == 0), path)
@@ -551,7 +539,7 @@ def customer_dv_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _snap_cache_path("customer_dv_merge", sf_dir, "customer")
+    path = disk_cache_path(".snap_cache", "customer_dv_merge", sf_dir, "customer")
     if len(snapshots.snapshot_history(path)) != 3:
         shutil.rmtree(path, ignore_errors=True)
         snapshots.snapshot_commit(cust, path)
@@ -633,7 +621,7 @@ def lineitem_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_returnflag"
     )
-    path = _snap_cache_path("lineitem_zorder", sf_dir, "lineitem")
+    path = disk_cache_path(".snap_cache", "lineitem_zorder", sf_dir, "lineitem")
     if len(snapshots.snapshot_history(path)) != 2:
         shutil.rmtree(path, ignore_errors=True)
         snapshots.snapshot_commit(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pubg_data_pipeline_spark.operators import incremental
-from pubg_data_pipeline_spark.plans.base import QuerySpec, exact_scaled, sql_scaled
+from pubg_data_pipeline_spark.plans.base import QuerySpec, disk_cache_path, exact_scaled, sql_scaled
 from pubg_data_pipeline_spark.sources.tables import load_table
 
 
@@ -1368,16 +1368,9 @@ def events_daily_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially deleted target self-repairs via the operator's
     dir-vs-manifest check), and ``logic_version`` pins the rollup logic
     so editing this compute invalidates old results."""
-    import os
-
-    from pubg_data_pipeline_spark.plans.base import dataset_cache_tag
     from pubg_data_pipeline_spark.sources.io import backfill_stale_partitions
 
-    tag = dataset_cache_tag(sf_dir, "events")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    target = os.path.join(repo_root, ".index_cache", f"backfill_daily_{tag}")
+    target = disk_cache_path(".index_cache", "backfill_daily", sf_dir, "events")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
@@ -1424,16 +1417,9 @@ def events_daily_backfill_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself certifies that both commit backends converge to the same
     end state. Separate target dir: the two backends must not share a
     manifest lineage."""
-    import os
-
-    from pubg_data_pipeline_spark.plans.base import dataset_cache_tag
     from pubg_data_pipeline_spark.sources.io import backfill_stale_partitions
 
-    tag = dataset_cache_tag(sf_dir, "events")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    target = os.path.join(repo_root, ".index_cache", f"backfill_daily_log_{tag}")
+    target = disk_cache_path(".index_cache", "backfill_daily_log", sf_dir, "events")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )

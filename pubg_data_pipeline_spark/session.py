@@ -18,8 +18,12 @@ default so Catalyst auto-broadcasts small dimension tables.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 # Runtime SQL confs we require regardless of who built the session.
 # Applied via configure_session() so the engine also works when handed
@@ -136,3 +140,24 @@ def get_spark(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     return configure_session(spark)
+
+
+def artifact(spark: SparkSession, key: Hashable | None, build: Callable[[], _T]) -> _T:
+    """Session-scoped memo for derived artifacts: return what
+    ``build()`` made the first time ``key`` was asked for on this
+    session, building it now if it was not. ``key=None`` builds
+    without memoizing.
+
+    The memo hangs off the session object, so a stopped session's
+    frames die with it and a new session starts empty; keys never name
+    the application, and nothing is evicted. Each caller keys by site
+    and by dataset (``plans.base.dataset_cache_tag`` or an explicit
+    cache key), so a regenerated dataset builds afresh."""
+    if key is None:
+        return build()
+    memo = getattr(spark, "_pds_artifacts", None)
+    if memo is None:
+        memo = spark._pds_artifacts = {}
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pubg_data_pipeline_spark.session import configure_session
+from pubg_data_pipeline_spark.session import artifact, configure_session
 
 TABLES = (
     "region",
@@ -64,11 +64,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, normalizing types.
 
     The constructed DataFrame (an immutable UNEXECUTED plan — no rows,
-    no results) is memoized on the session object, keyed by the
-    parquet's mtime+size: ``spark.read.parquet`` re-reads footers and
-    re-infers the schema on the driver every call, and with ~150
-    benched queries x 2-3 tables x 3 timed passes that synchronous
-    driver work was a measurable slice of every query's constant cost.
+    no results) is memoized on the session (``session.artifact``),
+    keyed by the parquet's mtime+size: ``spark.read.parquet`` re-reads
+    footers and re-infers the schema on the driver every call, and
+    with ~150 benched queries x 2-3 tables x 3 timed passes that
+    synchronous driver work was a measurable slice of every query's
+    constant cost.
     mtime/size keying means a regenerated dataset (same path, new
     content — the round-2 failure class) can never serve a stale
     schema; hanging the cache off the session object means it dies
@@ -79,31 +80,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        key = ("load_table", path, st.st_mtime_ns, st.st_size)
     except OSError:
         key = None  # missing/unstatable: let spark.read raise as before
-    cache: dict | None = getattr(spark, "_pds_table_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._pds_table_cache = cache
-        except Exception:
-            pass
-    if key is not None and key in cache:
-        return cache[key]
-    df = spark.read.parquet(path)
-    for ts_col in _TS_COLUMNS.get(name, ()):
-        ts_dtype = dict(df.dtypes).get(ts_col)
-        if ts_dtype == "bigint":
-            # nanos -> micros, truncating like DuckDB's ns->us display/cast
-            # (bigint only arrives via the nanosAsLong flag, i.e. ns).
-            df = df.withColumn(ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)"))
-        elif ts_dtype == "timestamp_ntz":
-            # Value-identical under the pinned UTC session timezone.
-            df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if key is not None:
-        cache[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        for ts_col in _TS_COLUMNS.get(name, ()):
+            ts_dtype = dict(df.dtypes).get(ts_col)
+            if ts_dtype == "bigint":
+                # nanos -> micros, truncating like DuckDB's ns->us display/cast
+                # (bigint only arrives via the nanosAsLong flag, i.e. ns).
+                df = df.withColumn(ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)"))
+            elif ts_dtype == "timestamp_ntz":
+                # Value-identical under the pinned UTC session timezone.
+                df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        return df
+
+    return artifact(spark, key, build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

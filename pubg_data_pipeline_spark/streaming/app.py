@@ -842,7 +842,9 @@ def _commit_epoch_partition(table, root: str, epoch_id: int) -> None:
     parquet file into a temp dir and swap it in (commitproto.swap_dir).
     The side dirs' dot prefixes keep them out of every reader's listing
     of ``root``; a leftover from a crash is cleared or restored by the
-    next commit of the epoch."""
+    next commit of the epoch. An empty ``root/_SUCCESS`` then marks the
+    table committed, as a Spark write would (``io.warehouse_fsck``
+    flags a partitioned root without one)."""
     import os
     import shutil
 
@@ -855,6 +857,7 @@ def _commit_epoch_partition(table, root: str, epoch_id: int) -> None:
     os.makedirs(tmp)
     pq.write_table(table, os.path.join(tmp, "part-00000.snappy.parquet"))
     commitproto.swap_dir(tmp, part)
+    open(os.path.join(root, "_SUCCESS"), "a").close()
 
 
 def read_heavy_hitters(

@@ -103,7 +103,7 @@ def test_get_spark_cleans_superseded_checkpoints(spark):
 
 def test_connected_components_reliable_env_matches_local(spark, tmp_path, monkeypatch):
     """The CC loop picks up the session-level reliable-checkpoint dir
-    when no explicit checkpoint_dir is passed, and the switch does not
+    (its only route to reliable checkpoints), and the switch does not
     change the result."""
     from pubg_data_pipeline_spark.operators import graph
 

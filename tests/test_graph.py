@@ -55,11 +55,15 @@ def test_duplicate_and_reversed_edges_collapse(spark):
 
 
 def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
-    # checkpoint_dir routes lineage truncation through fault-tolerant
-    # DataFrame.checkpoint instead of localCheckpoint; results must be
-    # identical and checkpoint files must actually land in the dir.
+    # SPARK_GRAFT_CHECKPOINT_DIR routes lineage truncation through
+    # fault-tolerant DataFrame.checkpoint instead of localCheckpoint;
+    # results must be identical and checkpoint files must actually land
+    # in the session's checkpoint dir (this test's dir if it set it
+    # first, or an earlier test's: setCheckpointDir is once per session).
     # The bound of 0 forces the loop: the driver path would label this
     # small graph without a single reliable-checkpoint round.
+    import os
+
     monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13)], "src long, dst long"
@@ -68,15 +72,16 @@ def test_reliable_checkpoint_mode_matches_local(spark, tmp_path, monkeypatch):
         r["node"]: r["component"]
         for r in graph.connected_components(edges).collect()
     }
-    ckpt_dir = str(tmp_path / "cc_ckpt")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "cc_ckpt"))
     reliable = {
         r["node"]: r["component"]
-        for r in graph.connected_components(edges, checkpoint_dir=ckpt_dir).collect()
+        for r in graph.connected_components(edges).collect()
     }
     assert reliable == local
-    import os
-
-    assert any(os.scandir(ckpt_dir)), "no checkpoint files written to the reliable dir"
+    actual_dir = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    assert any(os.scandir(actual_dir.replace("file:", ""))), (
+        "no checkpoint files written to the reliable dir"
+    )
 
 
 def test_dedup_clusters_and_corpus(spark):

@@ -210,12 +210,23 @@ def test_epoch_replay_leaves_one_data_file(spark, tmp_path):
         app.heavy_hitters_epoch(batch, 1, str(state), ["k"], counters=4)
     app.heavy_hitters_epoch(batch.limit(0), 2, str(state), ["k"], counters=4)  # idle trigger
     for sub in ("summary", "totals"):
-        assert os.listdir(state / sub) == ["__epoch=1"]
+        assert sorted(os.listdir(state / sub)) == ["_SUCCESS", "__epoch=1"]
         files = os.listdir(state / sub / "__epoch=1")
         assert len([f for f in files if not f.startswith((".", "_"))]) == 1
     assert sorted(tuple(r) for r in spark.read.parquet(str(state / "summary")).collect()) == [
         ("a", 5, 1), ("b", 2, 1)
     ]
+
+
+def test_epoch_store_passes_warehouse_fsck(spark, tmp_path):
+    """The driver-side commit marks both roots committed the way a
+    Spark write does, so a healthy store has no fsck finding."""
+    from pubg_data_pipeline_spark.sources.io import warehouse_fsck
+
+    state = str(tmp_path / "hh_fsck")
+    batch = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "k string")
+    app.heavy_hitters_epoch(batch, 0, state, ["k"], counters=4)
+    assert warehouse_fsck(state) == []
 
 
 def test_epoch_replay_after_crash_in_commit_swap(spark, tmp_path, monkeypatch):

@@ -48,8 +48,9 @@ def test_load_table_invalidates_on_regeneration(spark, tmp_path):
 
 
 def test_load_table_cache_not_shared_across_sessions(spark):
-    # the cache hangs off the session object, not the module
-    assert isinstance(getattr(spark, "_pds_table_cache", None), dict)
+    # the cache hangs off the session object (session.artifact's
+    # memo), not the module
+    assert isinstance(getattr(spark, "_pds_artifacts", None), dict)
     import pubg_data_pipeline_spark.sources.tables as T
 
     assert not hasattr(T, "_TABLE_CACHE")
