@@ -34,7 +34,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pubg_data_pipeline_spark.operators.ckpt import checkpoint
+from pubg_data_pipeline_spark.operators.ckpt import Scope
 
 # ------------------------------------------------------------------
 # pure-Python reference (tests pin the distributed paths against it)
@@ -152,35 +152,38 @@ def train_bpe(
     )
     # materialize the vocabulary ONCE: every round runs one job, and
     # without this each job would re-aggregate the corpus token stream
-    # down to the vocab (num_merges full corpus scans instead of one)
-    df, _ = checkpoint(df)
+    # down to the vocab (num_merges full corpus scans instead of one).
+    # Each later cut supersedes the one before; the last is released on
+    # return, since only the merge list leaves this function.
     merges: list[tuple[str, str]] = []
-    for i in range(num_merges):
-        pairs = df.select(
-            "__c",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("__syms"), 1, F.size("__syms") - 1),
-                    F.slice(F.col("__syms"), 2, F.size("__syms") - 1),
-                    lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p")
-            .agg(F.sum("__c").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-            .limit(1)
-            .collect()  # one (pair, count) row per round — driver-scalar,
-            # same justification as graph.connected_components convergence
-        )
-        if not best:
-            break
-        a, b = best[0]["p"]["a"], best[0]["p"]["b"]
-        merges.append((a, b))
-        df = df.select("__c", _merge_pair_col(F.col("__syms"), a, b).alias("__syms"))
-        if (i + 1) % checkpoint_every == 0:
-            df, _ = checkpoint(df)
+    with Scope(vocab.sparkSession) as cuts:
+        df = cuts.cut(df)
+        for i in range(num_merges):
+            pairs = df.select(
+                "__c",
+                F.explode(
+                    F.zip_with(
+                        F.slice(F.col("__syms"), 1, F.size("__syms") - 1),
+                        F.slice(F.col("__syms"), 2, F.size("__syms") - 1),
+                        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+                    )
+                ).alias("p"),
+            )
+            best = (
+                pairs.groupBy("p")
+                .agg(F.sum("__c").alias("n"))
+                .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
+                .limit(1)
+                .collect()  # one (pair, count) row per round — driver-scalar,
+                # same justification as graph.connected_components convergence
+            )
+            if not best:
+                break
+            a, b = best[0]["p"]["a"], best[0]["p"]["b"]
+            merges.append((a, b))
+            df = df.select("__c", _merge_pair_col(F.col("__syms"), a, b).alias("__syms"))
+            if (i + 1) % checkpoint_every == 0:
+                df = cuts.supersede(df)
     return merges
 
 

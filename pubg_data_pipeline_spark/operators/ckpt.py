@@ -29,7 +29,12 @@ problems:
    local default stays localCheckpoint: fastest, and executor loss
    does not exist in local mode. :func:`checkpoint` is the only
    place that makes this choice; every eager or lazy lineage cut in
-   ``operators/``, ``plans/`` and ``functions/`` goes through it.
+   ``operators/``, ``plans/``, ``functions/`` and ``streaming/`` goes
+   through it.
+
+A cut owned by one call (an epoch, a compaction, a training loop) is
+taken through :class:`Scope`, which releases it when that call
+returns; ``barrier`` is for cuts whose frame outlives the call.
 """
 
 from __future__ import annotations
@@ -119,3 +124,40 @@ def barrier(df: DataFrame, site: str, eager: bool = False) -> DataFrame:
         release_rdds(spark, _SITE_BLOCKS.get(key, set()))
         _SITE_BLOCKS[key] = ids
     return out
+
+
+class Scope:
+    """Lineage cuts owned by one call, released when it returns.
+
+    ``with Scope(spark) as cuts: df = cuts.cut(df)`` checkpoints
+    through :func:`checkpoint` and releases every block the scope
+    took when the ``with`` block exits, normally or by an exception.
+    Frames cut here must not be used after that. There is no site key,
+    unlike :func:`barrier`: two streams running the same epoch body
+    against different paths each own their blocks, so neither can
+    release the other's mid-epoch."""
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._ids: set[int] = set()
+
+    def __enter__(self) -> Scope:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        release_rdds(self._spark, self._ids)
+        self._ids = set()
+
+    def cut(self, df: DataFrame) -> DataFrame:
+        """Eager :func:`checkpoint` of ``df``, owned by this scope."""
+        out, ids = checkpoint(df)
+        self._ids |= ids
+        return out
+
+    def supersede(self, df: DataFrame) -> DataFrame:
+        """Cut ``df``, then release every earlier cut of this scope:
+        an iterative loop keeps one live copy of its state."""
+        old, self._ids = self._ids, set()
+        out = self.cut(df)
+        release_rdds(self._spark, old)
+        return out

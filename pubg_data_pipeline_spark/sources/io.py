@@ -37,6 +37,27 @@ def write_partitioned_by_date(
     )
 
 
+def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
+    """Replace exactly the ``col=value`` partitions of ``path`` that
+    ``df`` has rows for (dynamic partition overwrite); every other
+    partition stays as it was, and an empty ``df`` touches nothing.
+
+    This is the epoch-write protocol of the state tables in
+    ``streaming/app.py``: an epoch writes its rows with
+    ``__epoch = F.lit(epoch_id)``, so an at-least-once replay of epoch
+    N rewrites only ``__epoch=N`` with the same rows instead of
+    appending duplicates, and a replay that recomputes no rows leaves
+    the committed partition alone. Spark stages the write under
+    ``path/.spark-staging-*`` (invisible to readers) and moves the
+    partition directories into place when the job commits."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
+
+
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,
@@ -450,12 +471,7 @@ def propagate_deletes(
     # the directories being overwritten mid-write
     survivors = survivors.localCheckpoint()
     post = survivors.count()
-    (
-        survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_path)
-    )
+    overwrite_partitions(survivors, table_path, partition_col)
     kept = {str(r[0]) for r in survivors.select(partition_col).distinct().collect()}
     doomed = {str(p) for p in affected} - kept
     if backend == "log":
@@ -762,12 +778,7 @@ def backfill_stale_partitions(
                 f"{partition_col!r}: {sorted(drifted)[:5]} not in the stale "
                 "keys. Emit the partition column verbatim from the source."
             )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
+        overwrite_partitions(out, target_path, partition_col)
         # a stale partition whose recompute yielded ZERO rows writes
         # nothing under dynamic overwrite — its old directory must go,
         # or the target serves pre-correction data forever (same sweep

@@ -71,6 +71,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -380,6 +381,43 @@ class CommitConflict(RuntimeError):
     callers (delete/compact): re-read the new head and redo the
     transformation; blindly rebasing would clobber the concurrent
     commit's rows (lost update)."""
+
+
+def retry_on_conflict(
+    path: str,
+    what: str,
+    attempt: Callable[[int | None], dict | None],
+    max_retries: int = 5,
+) -> dict | None:
+    """The serializable read-modify-write loop every rewrite of a
+    snapshot table runs (delete, merge, compact, and the change-feed
+    epochs in ``streaming/app.py``).
+
+    Each try lists the head version (``None`` when the table has no
+    commits; no manifest is opened, so the cost does not grow with the
+    table's age) and returns ``attempt(head)``. The attempt derives its
+    commit from that version and publishes it pinned to it
+    (``snapshot_commit(expected_parent=head)``, or a CAS on slot
+    ``head + 1``); when another commit lands first it raises
+    :class:`CommitConflict`, and the loop re-reads the head and calls it
+    again. Data a losing attempt wrote stays invisible until
+    ``snapshot_vacuum`` reclaims it. After ``max_retries`` conflicts
+    the loop raises ``RuntimeError`` naming ``what``."""
+    for _ in range(max_retries):
+        versions = _versions(path)
+        try:
+            return attempt(versions[-1] if versions else None)
+        except CommitConflict:
+            continue
+    raise RuntimeError(
+        f"{what} lost the read-modify-write race {max_retries} times at {path!r}."
+    )
+
+
+def _require_head(path: str, head: int | None) -> int:
+    if head is None:
+        raise FileNotFoundError(f"no snapshot commits at {path!r}")
+    return head
 
 
 def snapshot_commit(
@@ -807,11 +845,9 @@ def snapshot_merge_upsert(
     use_dv: bool = False,
 ) -> dict:
     """``MERGE INTO table USING updates ON keys`` (upsert form: matched
-    rows replaced by the update, unmatched updates inserted) with the
-    same serializable read-modify-write protocol as
-    :func:`snapshot_delete_where` — pinned to the head it read,
-    :class:`CommitConflict` retries the whole merge, so a concurrent
-    append can never be silently clobbered. ``updates`` must be
+    rows replaced by the update, unmatched updates inserted) as a
+    serializable read-modify-write (:func:`retry_on_conflict`), so a
+    concurrent append can never be silently clobbered. ``updates`` must be
     key-unique (enforced — a multi-match MERGE is nondeterministic and
     every real MERGE implementation rejects it) and schema-compatible
     with the table. Returns ``{"version", "updated", "inserted"}``.
@@ -852,11 +888,9 @@ def snapshot_merge_upsert(
         return _merge_upsert_dv(
             spark, path, updates, key_cols, n_updates, max_retries
         )
-    for _ in range(max_retries):
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot commits at {path!r}")
-        head = versions[-1]
+
+    def attempt(head: int | None) -> dict:
+        head = _require_head(path, head)
         current = snapshot_read(spark, path, version=head)
         if set(current.columns) != set(updates.columns):
             raise ValueError(
@@ -886,23 +920,18 @@ def snapshot_merge_upsert(
             .withColumn("_change_type", F.lit("insert"))
         )
         change = matched_old.unionByName(matched_new).unionByName(inserted_rows)
-        try:
-            v = snapshot_commit(
-                merged,
-                path,
-                mode="overwrite",
-                expected_parent=head,
-                change_data=change,
-                op_hint="merge",
-            )
-        except CommitConflict:
-            continue
+        v = snapshot_commit(
+            merged,
+            path,
+            mode="overwrite",
+            expected_parent=head,
+            change_data=change,
+            op_hint="merge",
+        )
         updated = n_current - n_survivors
         return {"version": v, "updated": updated, "inserted": n_updates - updated}
-    raise RuntimeError(
-        f"snapshot_merge_upsert lost the read-modify-write race "
-        f"{max_retries} times at {path!r}."
-    )
+
+    return retry_on_conflict(path, "snapshot_merge_upsert", attempt, max_retries)
 
 
 def _merge_upsert_dv(
@@ -937,11 +966,9 @@ def _merge_upsert_dv(
             key_bounds = [(k, ">=", lo), (k, "<=", hi)]
     log = _log(path)
     stats_memo: dict[tuple, dict] = {}
-    for _ in range(max_retries):
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot commits at {path!r}")
-        head = versions[-1]
+
+    def attempt(head: int | None) -> dict:
+        head = _require_head(path, head)
         meta = _read_manifest(path, head)
         if "schema" in meta:
             if _schema_compat(meta["schema"], updates.schema.json()) != "same":
@@ -1048,13 +1075,14 @@ def _merge_upsert_dv(
                 **meta.get("file_stats", {}),
                 **stats_memo[skey],
             }
-        if log.try_publish_version(manifest, head + 1, commit_id):
-            return {"version": head + 1, "updated": updated, "inserted": inserted}
-        # lost the CAS: re-derive the match on the new head (the
-        # stranded _dv/_changes attempt dirs are vacuum debris)
-    raise RuntimeError(
-        f"snapshot_merge_upsert(use_dv=True) lost the read-modify-write "
-        f"race {max_retries} times at {path!r}."
+        if not log.try_publish_version(manifest, head + 1, commit_id):
+            # re-derive the match on the new head (the stranded
+            # _dv/_changes attempt dirs are vacuum debris)
+            raise CommitConflict(f"merge at {path!r} lost slot v{head + 1}")
+        return {"version": head + 1, "updated": updated, "inserted": inserted}
+
+    return retry_on_conflict(
+        path, "snapshot_merge_upsert(use_dv=True)", attempt, max_retries
     )
 
 
@@ -1235,11 +1263,9 @@ def snapshot_delete_where(
 ) -> dict:
     """``DELETE FROM table WHERE condition`` with snapshot-table
     semantics: read the head version, keep the survivors, commit them
-    as an overwrite PINNED to that head (``expected_parent``) — a
-    concurrent commit raises :class:`CommitConflict` and the whole
-    read-modify-write retries on the new head, so a concurrent
-    append's rows can never be silently lost (the write-skew hazard
-    every naive read-then-overwrite has). SQL DELETE semantics for
+    as an overwrite PINNED to that head (:func:`retry_on_conflict`),
+    so a concurrent append's rows can never be silently lost (the
+    write-skew hazard every naive read-then-overwrite has). SQL DELETE semantics for
     NULLs: a row whose condition evaluates NULL is KEPT (only
     condition=TRUE deletes), spelled explicitly because a bare
     ``filter(~cond)`` would drop NULL-condition rows too.
@@ -1273,11 +1299,9 @@ def snapshot_delete_where(
         return _delete_where_dv(spark, path, condition, max_retries, prune_where)
     if prune_where is not None:
         raise ValueError("prune_where applies to use_dv=True deletes only")
-    for _ in range(max_retries):
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot commits at {path!r}")
-        head = versions[-1]
+
+    def attempt(head: int | None) -> dict:
+        head = _require_head(path, head)
         df = snapshot_read(spark, path, version=head)
         kept = df.filter(~F.coalesce(condition, F.lit(False)))
         deleted = df.count() - kept.count()
@@ -1288,22 +1312,17 @@ def snapshot_delete_where(
         removed = df.filter(F.coalesce(condition, F.lit(False))).withColumn(
             "_change_type", F.lit("delete")
         )
-        try:
-            v = snapshot_commit(
-                kept,
-                path,
-                mode="overwrite",
-                expected_parent=head,
-                change_data=removed,
-                op_hint="delete",
-            )
-            return {"version": v, "deleted_rows": deleted}
-        except CommitConflict:
-            continue  # head moved: re-read, re-derive, re-commit
-    raise RuntimeError(
-        f"snapshot_delete_where lost the read-modify-write race "
-        f"{max_retries} times at {path!r}."
-    )
+        v = snapshot_commit(
+            kept,
+            path,
+            mode="overwrite",
+            expected_parent=head,
+            change_data=removed,
+            op_hint="delete",
+        )
+        return {"version": v, "deleted_rows": deleted}
+
+    return retry_on_conflict(path, "snapshot_delete_where", attempt, max_retries)
 
 
 def _delete_where_dv(
@@ -1321,10 +1340,8 @@ def _delete_where_dv(
     feed must emit each deleted row exactly once), evaluate the
     condition, and publish a manifest that keeps the parent's files
     verbatim with the merged DV + the deleted rows as change files.
-    The publish is CAS-pinned to the head the scan read: losing the
-    race strands the just-written ``_dv``/``_changes`` dirs invisible
-    (vacuum reclaims them, like any lost commit) and the whole
-    read-modify-write retries on the new head."""
+    The publish is CAS-pinned to the head the scan read
+    (:func:`retry_on_conflict`)."""
     from pyspark.sql import functions as F
 
     if prune_where:
@@ -1334,11 +1351,9 @@ def _delete_where_dv(
                     f"prune_where op must be one of {_PRUNE_OPS}, got {op!r}"
                 )
     log = _log(path)
-    for _ in range(max_retries):
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot commits at {path!r}")
-        head = versions[-1]
+
+    def attempt(head: int | None) -> dict:
+        head = _require_head(path, head)
         meta = _read_manifest(path, head)
         files = meta["files"]
         if prune_where:
@@ -1397,13 +1412,14 @@ def _delete_where_dv(
         for key in ("schema", "evolved", "stats_cols", "file_stats"):
             if key in meta:
                 manifest[key] = meta[key]
-        if log.try_publish_version(manifest, head + 1, commit_id):
-            return {"version": head + 1, "deleted_rows": deleted}
-        # lost the CAS: the new head may hold different rows — redo the
-        # whole read-modify-write (the stranded dirs are vacuum debris)
-    raise RuntimeError(
-        f"snapshot_delete_where(use_dv=True) lost the read-modify-write "
-        f"race {max_retries} times at {path!r}."
+        if not log.try_publish_version(manifest, head + 1, commit_id):
+            # the new head may hold different rows: redo the whole
+            # read-modify-write (the stranded dirs are vacuum debris)
+            raise CommitConflict(f"delete at {path!r} lost slot v{head + 1}")
+        return {"version": head + 1, "deleted_rows": deleted}
+
+    return retry_on_conflict(
+        path, "snapshot_delete_where(use_dv=True)", attempt, max_retries
     )
 
 
@@ -1500,9 +1516,8 @@ def snapshot_compact(
     list into ``target_files`` files as one overwrite commit — rows
     identical, file count bounded (a minute-cadence streaming sink
     accretes one file per micro-batch; at 100 TB the footer reads
-    dominate scan setup). Same serializable read-modify-write protocol
-    as :func:`snapshot_delete_where`: pinned to the head it read,
-    conflict = re-read and retry, so compaction can never swallow a
+    dominate scan setup). A serializable read-modify-write
+    (:func:`retry_on_conflict`), so compaction can never swallow a
     concurrent append. Readers are never disturbed — the old files
     remain until ``snapshot_vacuum``, and a reader planned against the
     pre-compaction version keeps serving it. ``sort_within_by``
@@ -1527,11 +1542,9 @@ def snapshot_compact(
         raise ValueError("target_files must be >= 1")
     if sort_within_by and zorder_by:
         raise ValueError("pass sort_within_by OR zorder_by, not both")
-    for _ in range(max_retries):
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot commits at {path!r}")
-        head = versions[-1]
+
+    def attempt(head: int | None) -> dict:
+        head = _require_head(path, head)
         head_meta = _read_manifest(path, head)
         files_before = head_meta["n_files"]
         if (
@@ -1555,21 +1568,16 @@ def snapshot_compact(
             df = df.sortWithinPartitions(*sort_within_by)
         else:
             df = df.repartition(target_files)
-        try:
-            # op_hint="compact" records a provably-empty change set:
-            # a change consumer sees this rewrite as zero row changes
-            # instead of a stream-breaking opaque overwrite
-            v = snapshot_commit(
-                df, path, mode="overwrite", expected_parent=head, op_hint="compact"
-            )
-        except CommitConflict:
-            continue
+        # op_hint="compact" records a provably-empty change set: a
+        # change consumer sees this rewrite as zero row changes instead
+        # of a stream-breaking opaque overwrite
+        v = snapshot_commit(
+            df, path, mode="overwrite", expected_parent=head, op_hint="compact"
+        )
         return {
             "version": v,
             "files_before": files_before,
             "files_after": _read_manifest(path, v)["n_files"],
         }
-    raise RuntimeError(
-        f"snapshot_compact lost the read-modify-write race "
-        f"{max_retries} times at {path!r}."
-    )
+
+    return retry_on_conflict(path, "snapshot_compact", attempt, max_retries)

@@ -11,13 +11,15 @@ collect() in the z-score path.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from pubg_data_pipeline_spark.operators import ckpt
 from pubg_data_pipeline_spark.plans import analytics
-from pubg_data_pipeline_spark.sources import commitproto
+from pubg_data_pipeline_spark.sources import commitproto, io
 from pubg_data_pipeline_spark.streaming import etl, sinks
 
 
@@ -35,6 +37,56 @@ def _require_local_path(path: str, what: str) -> None:
         what,
         "deploy against a transactional table format for object-store/HDFS paths.",
     )
+
+
+def _has_data_files(path: str) -> bool:
+    """Whether a Spark parquet reader of ``path`` would list a data
+    file, the test a sink makes before reading its stored state (schema
+    inference fails on a directory without one). It skips what Spark's
+    file index skips: names starting with ``.``, and names starting
+    with ``_`` unless they hold ``=`` (``__epoch=3`` is a partition,
+    ``_SUCCESS`` is not data). A dynamic overwrite that dies mid-job
+    leaves its files under ``path/.spark-staging-*``; counted, they
+    would send every later epoch into schema inference over a
+    directory Spark sees as empty."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        if any(f.endswith(".parquet") and not hidden(f) for f in files):
+            return True
+    return False
+
+
+def _compact(spark, root: str, what: str, fold: Callable[[DataFrame], DataFrame]) -> None:
+    """Fold every ``__epoch`` partition of the state table at ``root``
+    into one ``__epoch=0`` partition: the one compaction protocol of
+    the epoch-partitioned state tables here.
+
+    ``fold`` receives the stored rows without ``__epoch`` and returns
+    their merge. Every state here merges by addition, by the
+    Misra-Gries offset rule or by a minimum, so answers read after the
+    fold equal the answers before it. The merged rows are cut (the
+    write must not recompute them from the directory it replaces),
+    written to a tmp dir and installed with ``commitproto.swap_dir``;
+    a crash at any point leaves the old table or the new one, which
+    the next ``commitproto.recover`` restores. Run a compaction only
+    over epochs older than the streaming checkpoint's replay window: a
+    replayed epoch whose partition was folded away would write it
+    again beside epoch 0."""
+    from pyspark.sql import functions as F
+
+    _require_local_path(root, what)
+    commitproto.recover(root)
+    tmp = commitproto.tmp_dir(root, "compact")
+    with ckpt.Scope(spark) as cuts:
+        merged = cuts.cut(
+            fold(spark.read.parquet(root).drop("__epoch")).withColumn("__epoch", F.lit(0))
+        )
+        merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
+    commitproto.swap_dir(tmp, root)
 
 
 def streaming_etl(
@@ -157,7 +209,6 @@ def rollup_merge_epoch(
     (the standard Delta txnAppId/txnVersion contract).
     """
     import json
-    import os
 
     from pubg_data_pipeline_spark.operators import incremental
 
@@ -271,18 +322,16 @@ def ingest_dedup_epoch(
     at 100 TB the index is 32 bytes + id per distinct doc.
 
     Exactly-once under foreachBatch's at-least-once retries: both
-    outputs are PARTITIONED BY the epoch id and written with dynamic
-    partition overwrite, so a replayed micro-batch overwrites exactly
-    its own ``__epoch=N`` directories instead of appending duplicates
+    outputs are epoch partitions written by ``io.overwrite_partitions``
     (plain append here was the classic duplicate-on-retry window: a
     crash between the two appends left the index missing the batch
     fingerprints, and the retry re-appended the same corpus rows).
     A retry that finds its fingerprints already indexed recomputes an
     empty keeper set and touches no partitions — the committed epoch-N
-    data, being deterministic, is already correct. Survivors are
-    materialized via eager ``localCheckpoint`` BEFORE either write:
-    the second write must never recompute the anti-join against the
-    index directory the first write just modified (and best-effort
+    data, being deterministic, is already correct. Survivors are cut
+    (``ckpt.Scope``, released when the epoch returns) BEFORE either
+    write: the second write must never recompute the anti-join against
+    the index directory the first write just modified (and best-effort
     ``persist`` could silently do exactly that on block eviction; the
     checkpoint either serves the materialized rows or fails the task,
     and a failed task replays the now-idempotent epoch).
@@ -291,8 +340,6 @@ def ingest_dedup_epoch(
     are unique per streaming checkpoint, and continue monotonically
     across restarts of the same checkpoint.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     from pubg_data_pipeline_spark.functions.text import doc_fingerprint
@@ -305,14 +352,8 @@ def ingest_dedup_epoch(
         return  # idle trigger: skip the O(index) scan and empty writes
     spark = batch_df.sparkSession
     batch = batch_df.withColumn("__fp", doc_fingerprint(F.col(text_col)))
-    # Bare-directory guard: an empty epoch creates the directory but no
-    # data files; with nothing indexed there is nothing to anti-join.
-    has_index = os.path.isdir(index_path) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(index_path)
-        for f in files
-    )
-    if has_index:
+    # With nothing indexed there is nothing to anti-join.
+    if _has_data_files(index_path):
         # Explicit schema: no schema-inference job per epoch.
         idx = (
             spark.read.schema("fingerprint string")
@@ -320,29 +361,20 @@ def ingest_dedup_epoch(
             .select(F.col("fingerprint").alias("__fp"))
         )
         batch = batch.join(idx, "__fp", "left_anti")
-    keep = (
-        exact_dedup(batch, ["__fp"], id_col)
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .localCheckpoint()
-    )
-    (
-        keep.drop("__fp")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(corpus_path)
-    )
-    (
-        keep.select(
-            F.col("__fp").alias("fingerprint"),
-            F.col(id_col).alias("keeper_id"),
+    with ckpt.Scope(spark) as cuts:
+        keep = cuts.cut(
+            exact_dedup(batch, ["__fp"], id_col).withColumn("__epoch", F.lit(int(epoch_id)))
+        )
+        io.overwrite_partitions(keep.drop("__fp"), corpus_path, "__epoch")
+        io.overwrite_partitions(
+            keep.select(
+                F.col("__fp").alias("fingerprint"),
+                F.col(id_col).alias("keeper_id"),
+                "__epoch",
+            ),
+            index_path,
             "__epoch",
         )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(index_path)
-    )
 
 
 def streaming_ingest_dedup(
@@ -397,19 +429,15 @@ def ingest_neardup_epoch(
     O(batch·bands + index probe), never O(historical text).
 
     Exactly-once under foreachBatch's at-least-once retries by the
-    same protocol as :func:`ingest_dedup_epoch`: both outputs are
-    PARTITIONED BY the epoch id and written with dynamic partition
-    overwrite (a replayed micro-batch overwrites exactly its own
-    ``__epoch=N`` directories), and survivors are materialized with an
-    eager ``localCheckpoint`` before either write so the index write
-    can never recompute the probe against the directory the corpus
-    write just changed. A retry that finds its bands already indexed
-    recomputes an empty survivor set and touches no partitions.
+    same protocol as :func:`ingest_dedup_epoch`: both outputs are epoch
+    partitions written by ``io.overwrite_partitions``, and survivors
+    are cut before either write so the index write can never recompute
+    the probe against the directory the corpus write just changed. A
+    retry that finds its bands already indexed recomputes an empty
+    survivor set and touches no partitions.
 
     Assumes one stream per (corpus_path, index_path) pair — epoch ids
     are unique per streaming checkpoint."""
-    import os
-
     from pyspark.sql import functions as F
 
     from pubg_data_pipeline_spark.operators.dedup import band_table, neardup_survivor_bands
@@ -420,35 +448,23 @@ def ingest_neardup_epoch(
     if batch_df.isEmpty():
         return  # idle trigger: skip the O(index) scan and empty writes
     spark = batch_df.sparkSession
-    has_index = os.path.isdir(index_path) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(index_path)
-        for f in files
-    )
     idx = (
-        spark.read.parquet(index_path).select("band_idx", "band_key") if has_index else None
+        spark.read.parquet(index_path).select("band_idx", "band_key")
+        if _has_data_files(index_path)
+        else None
     )
     bt = band_table(batch_df, text_col, id_col, num_hashes, bands, shingle_n)
-    keep = (
-        neardup_survivor_bands(bt, idx)
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .localCheckpoint()
-    )
-    keep_ids = keep.select(F.col("doc").alias(id_col), "__epoch").distinct()
-    (
-        batch_df.join(keep_ids, id_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(corpus_path)
-    )
-    (
-        keep.select("band_idx", "band_key", F.col("doc").alias("keeper_id"), "__epoch")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(index_path)
-    )
+    with ckpt.Scope(spark) as cuts:
+        keep = cuts.cut(
+            neardup_survivor_bands(bt, idx).withColumn("__epoch", F.lit(int(epoch_id)))
+        )
+        keep_ids = keep.select(F.col("doc").alias(id_col), "__epoch").distinct()
+        io.overwrite_partitions(batch_df.join(keep_ids, id_col), corpus_path, "__epoch")
+        io.overwrite_partitions(
+            keep.select("band_idx", "band_key", F.col("doc").alias("keeper_id"), "__epoch"),
+            index_path,
+            "__epoch",
+        )
 
 
 def streaming_ingest_neardup(
@@ -511,17 +527,15 @@ def dim_upsert_epoch(
     or replayed change with a lower version than the stored row can
     never regress the dimension — which also makes the epoch
     idempotent under foreachBatch's at-least-once replays. The merged
-    state is materialized (eager localCheckpoint) before the tmp
-    write so the swap never races a recomputation against the
-    directory being replaced, and the swap itself is
+    state is cut (``ckpt.Scope``) before the tmp write so the swap
+    never races a recomputation against the directory being replaced,
+    and the swap itself is
     ``commitproto.swap_dir`` (move dim aside, rename tmp onto dim, drop
     the aside) with crash recovery at epoch start — no window in which
     the only copy of the dimension is deleted. Local filesystem only (see
     ``_require_local_path``); a cluster deployment targets a
     transactional table format's MERGE INTO with the identical plan.
     """
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -550,9 +564,9 @@ def dim_upsert_epoch(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__src")
     )
-    merged = merged.localCheckpoint()
     tmp = commitproto.tmp_dir(dim_path, epoch_id)
-    merged.write.mode("overwrite").parquet(tmp)
+    with ckpt.Scope(spark) as cuts:
+        cuts.cut(merged).write.mode("overwrite").parquet(tmp)
     commitproto.swap_dir(tmp, dim_path)
 
 
@@ -632,8 +646,6 @@ def topk_search_epoch(
     Epoch cost is O(batch x queries); history is never re-scored, and
     the stored state is k rows per query regardless of corpus size.
     Same rename-aside swap + recovery as the other state sinks."""
-    import os
-
     from pubg_data_pipeline_spark.operators import similarity
 
     _require_local_path(state_path, "topk_search_epoch")
@@ -649,9 +661,9 @@ def topk_search_epoch(
         merged = similarity.merge_topk_states(prev, batch_topk, k=k)
     else:
         merged = batch_topk
-    merged = merged.localCheckpoint()
     tmp = commitproto.tmp_dir(state_path, epoch_id)
-    merged.write.mode("overwrite").parquet(tmp)
+    with ckpt.Scope(spark) as cuts:
+        cuts.cut(merged).write.mode("overwrite").parquet(tmp)
     commitproto.swap_dir(tmp, state_path)
 
 
@@ -683,17 +695,13 @@ def _epoch_table(spark, path: str, before_epoch: int, template: DataFrame) -> Da
     must never see its own previous partial output as base state. The
     ``__epoch < N`` predicate prunes on the partition column, so a
     replay reads exactly the directories it would have seen the first
-    time. Missing/fileless dir -> empty frame with the template's
-    schema (parquet schema inference cannot handle a bare dir)."""
-    import os
-
+    time. No data file (``_has_data_files``) -> empty frame with the
+    template's schema (parquet schema inference cannot handle a bare
+    dir)."""
     from pyspark.sql import functions as F
 
     commitproto.recover(path)  # a crashed compaction left the state aside
-    has_files = os.path.isdir(path) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-    )
-    if not has_files:
+    if not _has_data_files(path):
         return template.limit(0)
     return (
         spark.read.parquet(path)
@@ -725,9 +733,9 @@ def join_view_epoch(
     Epoch cost is O(Δ x matches + base scan) with both joins
     broadcast-small on the delta side — the view is NEVER rejoined
     from scratch. All three outputs (left base, right base, view
-    delta) are epoch-partitioned with dynamic partition overwrite, and
-    base reads filter ``__epoch < N``, so an at-least-once replay of
-    epoch N recomputes exactly the same rows and overwrites exactly
+    delta) are epoch partitions written by ``io.overwrite_partitions``,
+    and base reads filter ``__epoch < N``, so an at-least-once replay
+    of epoch N recomputes exactly the same rows and rewrites exactly
     its own partitions: exactly-once effective semantics without a
     transactional table format. Local filesystem only (see
     ``_require_local_path``); on a cluster the same plan targets a
@@ -743,22 +751,13 @@ def join_view_epoch(
     dr = batch_df.filter(F.col(side_col) == "right").select(*right_cols)
     l_old = _epoch_table(spark, left_path, epoch_id, dl)
     r_old = _epoch_table(spark, right_path, epoch_id, dr)
-    inc = (
-        dl.join(r_old.unionByName(dr), on)
-        .unionByName(l_old.join(dr, on))
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-    )
+    inc = dl.join(r_old.unionByName(dr), on).unionByName(l_old.join(dr, on))
     # View first, bases after: a crash in between replays the epoch,
     # which re-reads bases `< N` (unchanged) and overwrites the same
     # view partition deterministically.
     for out, path in ((inc, view_path), (dl, left_path), (dr, right_path)):
-        if out is not inc:
-            out = out.withColumn("__epoch", F.lit(int(epoch_id)))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+        io.overwrite_partitions(
+            out.withColumn("__epoch", F.lit(int(epoch_id))), path, "__epoch"
         )
 
 
@@ -812,8 +811,8 @@ def heavy_hitters_epoch(
     pyarrow readers) and renamed onto ``summary/__epoch=N`` and
     ``totals/__epoch=N``, replacing a previous copy — so a replay
     replaces exactly its own partition, which then holds one data file
-    (the same idempotence as join_view_epoch's dynamic overwrite,
-    without two Spark write jobs per epoch). Readers merge epoch
+    (the same idempotence as ``io.overwrite_partitions``, without two
+    Spark write jobs per epoch). Readers merge epoch
     summaries on demand (read_heavy_hitters); states are associative,
     so a maintenance job may compact old epochs into one without
     changing answers."""
@@ -845,7 +844,6 @@ def _commit_epoch_partition(table, root: str, epoch_id: int) -> None:
     next commit of the epoch. An empty ``root/_SUCCESS`` then marks the
     table committed, as a Spark write would (``io.warehouse_fsck``
     flags a partitioned root without one)."""
-    import os
     import shutil
 
     import pyarrow.parquet as pq
@@ -912,33 +910,26 @@ def streaming_heavy_hitters(
 
 def compact_heavy_hitters(spark, state_path: str, key_cols: list[str], counters: int = 200) -> None:
     """Maintenance: fold all stored epoch summaries into a single
-    epoch-0 summary (MG states are associative, so answers are
-    unchanged — test-pinned). Run this only for epochs older than the
-    streaming checkpoint's retention: a replay of a compacted-away
-    epoch would re-append it. Keeps read cost O(counters) instead of
-    O(epochs x counters) on long-lived stores."""
+    epoch-0 summary and the row totals into one total (``_compact``;
+    MG states are associative, so answers are unchanged — test-pinned).
+    Keeps read cost O(counters) instead of O(epochs x counters) on
+    long-lived stores."""
     from pyspark.sql import functions as F
 
     from pubg_data_pipeline_spark.operators import incremental
 
-    _require_local_path(state_path, "compact_heavy_hitters")
-    commitproto.recover(f"{state_path}/summary")
-    commitproto.recover(f"{state_path}/totals")
-    summary = spark.read.parquet(f"{state_path}/summary").drop("__epoch")
-    merged = incremental.merge_mg_states([summary], counters).withColumn(
-        "__epoch", F.lit(0)
-    ).localCheckpoint()
-    total = (
-        spark.read.parquet(f"{state_path}/totals")
-        .agg(F.sum("n_rows").alias("n_rows"))
-        .select(F.lit(0).alias("__epoch"), "n_rows")
-        .localCheckpoint()
+    _compact(
+        spark,
+        f"{state_path}/summary",
+        "compact_heavy_hitters",
+        lambda df: incremental.merge_mg_states([df], counters),
     )
-    for df, sub in ((merged, "summary"), (total, "totals")):
-        target = f"{state_path}/{sub}"
-        tmp = commitproto.tmp_dir(target, "compact")
-        df.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-        commitproto.swap_dir(tmp, target)
+    _compact(
+        spark,
+        f"{state_path}/totals",
+        "compact_heavy_hitters",
+        lambda df: df.agg(F.sum("n_rows").alias("n_rows")),
+    )
 
 
 def span_flag_epoch(
@@ -965,11 +956,11 @@ def span_flag_epoch(
 
     Exactly-once under foreachBatch replays, same recipe as
     join_view_epoch: the index read filters ``__epoch < N``, both
-    writes dynamically overwrite only their own ``__epoch=N``
-    partitions, and the epoch's outputs are deterministic given the
-    pre-N index — so a retried epoch rewrites identical data. Span
-    list first, index second: a crash between the two replays the
-    epoch against the unchanged pre-N index.
+    writes go through ``io.overwrite_partitions``, and the epoch's
+    outputs are deterministic given the pre-N index — so a retried
+    epoch rewrites identical data. Span list first, index second: a
+    crash between the two replays the epoch against the unchanged
+    pre-N index.
 
     At 100 TB: hash grams to 8 bytes (functions.text.rolling_
     fingerprint's base/modulus) and store the index bucketed on the
@@ -988,42 +979,41 @@ def span_flag_epoch(
         return
     spark = batch_df.sparkSession
     toks = word_tokens(F.lower(F.col(text_col)))
-    # Materialized once: the gram table feeds both the count aggregate
-    # and the span scan, and must not re-tokenize the batch twice.
-    grams = batch_df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(_ngram_array(toks, gram_len)).alias("pos", "gram"),
-    ).localCheckpoint()
-    bn = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
-    hist = _epoch_table(spark, index_path, epoch_id, bn)
-    hist_n = hist.groupBy("gram").agg(F.sum("n").alias("hn"))
-    dup = (
-        bn.join(hist_n, "gram", "left")
-        .filter(F.col("n") + F.coalesce(F.col("hn"), F.lit(0)) >= 2)
-        .select("gram")
-    )
-    dp = grams.join(dup, "gram", "left_semi")
-    w = Window.partitionBy("__id").orderBy("pos")
-    islands = dp.withColumn("__isl", F.col("pos") - F.row_number().over(w))
-    spans = (
-        islands.groupBy("__id", "__isl")
-        .agg(F.min("pos").alias("span_start"), F.max("pos").alias("__lg"))
-        .select(
-            F.col("__id").alias(id_col),
-            "span_start",
-            (F.col("__lg") + gram_len - 1).alias("span_end"),
-            (F.col("__lg") - F.col("span_start") + gram_len).alias("span_tokens"),
+    with ckpt.Scope(spark) as cuts:
+        # Cut once: the gram table feeds both the count aggregate and
+        # the span scan, and must not re-tokenize the batch twice.
+        grams = cuts.cut(
+            batch_df.select(
+                F.col(id_col).alias("__id"),
+                F.posexplode(_ngram_array(toks, gram_len)).alias("pos", "gram"),
+            )
         )
-        .filter(F.col("span_tokens") >= min_span_tokens)
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-    )
-    for out, path in ((spans, spans_path), (bn.withColumn("__epoch", F.lit(int(epoch_id))), index_path)):
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+        bn = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
+        hist = _epoch_table(spark, index_path, epoch_id, bn)
+        hist_n = hist.groupBy("gram").agg(F.sum("n").alias("hn"))
+        dup = (
+            bn.join(hist_n, "gram", "left")
+            .filter(F.col("n") + F.coalesce(F.col("hn"), F.lit(0)) >= 2)
+            .select("gram")
         )
+        dp = grams.join(dup, "gram", "left_semi")
+        w = Window.partitionBy("__id").orderBy("pos")
+        islands = dp.withColumn("__isl", F.col("pos") - F.row_number().over(w))
+        spans = (
+            islands.groupBy("__id", "__isl")
+            .agg(F.min("pos").alias("span_start"), F.max("pos").alias("__lg"))
+            .select(
+                F.col("__id").alias(id_col),
+                "span_start",
+                (F.col("__lg") + gram_len - 1).alias("span_end"),
+                (F.col("__lg") - F.col("span_start") + gram_len).alias("span_tokens"),
+            )
+            .filter(F.col("span_tokens") >= min_span_tokens)
+        )
+        for out, path in ((spans, spans_path), (bn, index_path)):
+            io.overwrite_partitions(
+                out.withColumn("__epoch", F.lit(int(epoch_id))), path, "__epoch"
+            )
 
 
 def streaming_span_flags(
@@ -1055,24 +1045,17 @@ def streaming_span_flags(
 
 def compact_gram_index(spark, index_path: str) -> None:
     """Maintenance: fold all stored gram-count epoch partitions into a
-    single epoch-0 partition (counts are associative sums, so flagging
-    decisions are unchanged). Run only for epochs older than the
-    streaming checkpoint's retention — a replay of a compacted-away
-    epoch would double-count its grams."""
+    single epoch-0 partition (``_compact``; counts are associative
+    sums, so flagging decisions are unchanged). A replay of a
+    compacted-away epoch would double-count its grams."""
     from pyspark.sql import functions as F
 
-    _require_local_path(index_path, "compact_gram_index")
-    commitproto.recover(index_path)
-    merged = (
-        spark.read.parquet(index_path)
-        .groupBy("gram")
-        .agg(F.sum("n").alias("n"))
-        .withColumn("__epoch", F.lit(0))
-        .localCheckpoint()
+    _compact(
+        spark,
+        index_path,
+        "compact_gram_index",
+        lambda df: df.groupBy("gram").agg(F.sum("n").alias("n")),
     )
-    tmp = commitproto.tmp_dir(index_path, "compact")
-    merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    commitproto.swap_dir(tmp, index_path)
 
 
 def compact_ingest_index(spark, index_path: str, key_cols: list[str]) -> None:
@@ -1089,27 +1072,19 @@ def compact_ingest_index(spark, index_path: str, key_cols: list[str]) -> None:
     (:func:`ingest_dedup_epoch`), ["band_idx", "band_key"] for the
     near-dup band index (:func:`ingest_neardup_epoch`).
 
-    Same retention caveat as :func:`compact_gram_index`: run only for
-    epochs older than the streaming checkpoint's replay window — a
-    replayed epoch whose partition was compacted away would re-write
-    its ``__epoch=N`` directory, and its rows would then exist both
-    there and in the compacted base (harmless for membership, but the
-    keeper_id uniqueness invariant degrades to first-wins-on-read).
-    Crash-safe via the same rename-aside swap."""
+    The fold and its retention caveat are ``_compact``'s: a replayed
+    epoch whose partition was compacted away would re-write its
+    ``__epoch=N`` directory, and its rows would then exist both there
+    and in the compacted base (harmless for membership, but the
+    keeper_id uniqueness invariant degrades to first-wins-on-read)."""
     from pyspark.sql import functions as F
 
-    _require_local_path(index_path, "compact_ingest_index")
-    commitproto.recover(index_path)
-    merged = (
-        spark.read.parquet(index_path)
-        .groupBy(*key_cols)
-        .agg(F.min("keeper_id").alias("keeper_id"))
-        .withColumn("__epoch", F.lit(0))
-        .localCheckpoint()
+    _compact(
+        spark,
+        index_path,
+        "compact_ingest_index",
+        lambda df: df.groupBy(*key_cols).agg(F.min("keeper_id").alias("keeper_id")),
     )
-    tmp = commitproto.tmp_dir(index_path, "compact")
-    merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    commitproto.swap_dir(tmp, index_path)
 
 
 # ------------------------------------------------------------------
@@ -1135,23 +1110,20 @@ def drift_epoch(
 ) -> None:
     """One epoch of streaming drift monitoring: reduce the micro-batch
     to its per-bucket counts (bucket cardinality, not data size) and
-    store them as THIS epoch's partition. Dynamic overwrite of the
-    ``__epoch=N`` partition makes replays idempotent — the same recipe
-    as heavy_hitters_epoch; PSI itself is computed at READ time, so
+    store them as THIS epoch's partition (``io.overwrite_partitions``,
+    so replays are idempotent); PSI itself is computed at READ time, so
     the stored state is raw mergeable counts, never derived scores."""
     from pyspark.sql import functions as F
 
     _require_local_path(state_path, "drift_epoch")
     if batch_df.isEmpty():
         return
-    (
+    io.overwrite_partitions(
         batch_df.groupBy(key.alias(key_name))
         .agg(F.count(F.lit(1)).alias("n_cur"))
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(state_path)
+        .withColumn("__epoch", F.lit(int(epoch_id))),
+        state_path,
+        "__epoch",
     )
 
 
@@ -1243,9 +1215,9 @@ def dlq_etl_epoch(
     """One epoch of quarantining ingestion: ONE parse pass splits the
     micro-batch into typed envelope rows and dead letters
     (etl.parse_envelope_with_dlq); both land under their own
-    ``__epoch=N`` partition with dynamic overwrite, so at-least-once
-    replays rewrite exactly their own epoch instead of appending
-    duplicates (the ingest_dedup_epoch recipe). The batch is persisted
+    ``__epoch=N`` partition through ``io.overwrite_partitions``, so
+    at-least-once replays rewrite exactly their own epoch instead of
+    appending duplicates. The batch is persisted
     once for the two writes — the reference's recompute-per-action
     anti-pattern (SURVEY.md §4.2 item 2) would parse the batch twice."""
     from pyspark.sql import functions as F
@@ -1260,12 +1232,8 @@ def dlq_etl_epoch(
     try:
         good, dead = etl.parse_envelope_with_dlq(batch_df, value_col)
         for df, path in ((good, good_path), (dead, dlq_path)):
-            (
-                df.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__epoch")
-                .parquet(path)
+            io.overwrite_partitions(
+                df.withColumn("__epoch", F.lit(int(epoch_id))), path, "__epoch"
             )
     finally:
         batch_df.unpersist()
@@ -1283,8 +1251,8 @@ def streaming_etl_with_dlq(
     """Envelope ingestion that never drops OR silently forwards poison
     pills: typed rows to ``good_path``, unparseable payloads (with
     reason) to ``dlq_path`` for post-fix replay. One stream, one parse,
-    exactly-once effective output under replays via epoch-partitioned
-    dynamic overwrite."""
+    exactly-once effective output under replays via epoch partitions
+    (``io.overwrite_partitions``)."""
     return sinks.foreach_batch_sink(
         stream,
         lambda df, eid: dlq_etl_epoch(df, eid, good_path, dlq_path, value_col),
@@ -1357,10 +1325,9 @@ def cms_epoch(
     micro-batch is reduced to its own depth x width counter grid
     (operators/sketches.py:count_min_build — at most depth*width rows
     however large the batch) stored as the ``__epoch=N`` partition of
-    the state table. Dynamic partition overwrite makes at-least-once
-    replays idempotent (a re-run epoch REPLACES its own grid, same
-    recipe as heavy_hitters_epoch); grids merge by counter addition,
-    so readers union epochs on demand and a compaction job can fold
+    the state table, written by ``io.overwrite_partitions`` (a re-run
+    epoch REPLACES its own grid); grids merge by counter addition, so
+    readers union epochs on demand and ``compact_cms`` can fold
     history without changing any estimate.
 
     MG (heavy_hitters_epoch) answers "which keys are frequent";
@@ -1378,12 +1345,7 @@ def cms_epoch(
     grid = sketches.count_min_build(batch_df, key_col, depth, width).withColumn(
         "__epoch", F.lit(int(epoch_id))
     )
-    (
-        grid.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{state_path}/grid")
-    )
+    io.overwrite_partitions(grid, f"{state_path}/grid", "__epoch")
 
 
 def read_cms_estimates(
@@ -1432,27 +1394,13 @@ def streaming_cms(
 
 
 def compact_cms(spark, state_path: str) -> None:
-    """Maintenance: fold all epoch grids into a single epoch-0 grid —
-    counter addition is associative, so every subsequent estimate is
-    unchanged while the stored state drops from O(epochs * k * w) to
-    O(k * w)."""
-    from pyspark.sql import functions as F
-
+    """Maintenance: fold all epoch grids into a single epoch-0 grid
+    (``_compact``) — counter addition is associative, so every
+    subsequent estimate is unchanged while the stored state drops from
+    O(epochs * k * w) to O(k * w)."""
     from pubg_data_pipeline_spark.operators import sketches
 
-    _require_local_path(state_path, "compact_cms")
-    commitproto.recover(f"{state_path}/grid")
-    merged = (
-        sketches.count_min_merge(
-            spark.read.parquet(f"{state_path}/grid").drop("__epoch")
-        )
-        .withColumn("__epoch", F.lit(0))
-        .localCheckpoint()
-    )
-    target = f"{state_path}/grid"
-    tmp = commitproto.tmp_dir(target, "compact")
-    merged.write.mode("overwrite").partitionBy("__epoch").parquet(tmp)
-    commitproto.swap_dir(tmp, target)
+    _compact(spark, f"{state_path}/grid", "compact_cms", sketches.count_min_merge)
 
 
 def moments_epoch(
@@ -1466,7 +1414,7 @@ def moments_epoch(
     micro-batch's embedding vectors reduce to a single ``(n, s, g)``
     accumulator row (operators/linalg.py:second_moments — dim + dim²
     doubles regardless of batch size) stored as the ``__epoch=N``
-    partition. Dynamic overwrite makes replays idempotent; rows are
+    partition (``io.overwrite_partitions``); rows are
     element-wise sums, so the corpus covariance / PCA spectrum is
     always readable from the union of epochs without rescanning any
     vector — the streaming twin of `embedding_covariance` /
@@ -1483,12 +1431,7 @@ def moments_epoch(
     state = linalg.second_moments(batch_df, vec_col, dim).withColumn(
         "__epoch", F.lit(int(epoch_id))
     )
-    (
-        state.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{state_path}/moments")
-    )
+    io.overwrite_partitions(state, f"{state_path}/moments", "__epoch")
 
 
 def read_moments(spark, state_path: str, dim: int) -> DataFrame:
@@ -1557,10 +1500,10 @@ def cdf_apply_epoch(
     - A retraction-bearing epoch does a serializable read-modify-write:
       survivors = target ∖ netted-removes, plus the netted adds,
       committed as one overwrite pinned to the head it read
-      (CommitConflict retries). The commit records its own change set
-      (actually-removed rows as ``delete``, adds as ``insert``), so
-      maintenance chains COMPOSE: a CDF consumer of the TARGET rides
-      through this rewrite too.
+      (``snapshots.retry_on_conflict``). The commit records its own
+      change set (actually-removed rows as ``delete``, adds as
+      ``insert``), so maintenance chains COMPOSE: a CDF consumer of
+      the TARGET rides through this rewrite too.
 
     Cost model at 100 TB: deletes rewrite the target (no deletion
     vectors here) — which is why delete propagation arrives in rare,
@@ -1583,32 +1526,32 @@ def cdf_apply_epoch(
     if t_rem.isEmpty():
         snapshot_sink_epoch(t_add, epoch_id, target_table, app_id)
         return
-    # same-batch cancellation (see docstring): net the two sides before
-    # touching the target
-    net_add = t_add.exceptAll(t_rem).localCheckpoint()  # stable across retries
-    net_rem = t_rem.exceptAll(t_add).localCheckpoint()
-    if net_rem.isEmpty():
-        snapshot_sink_epoch(net_add, epoch_id, target_table, app_id)
-        return
     spark = batch_df.sparkSession
-    for _ in range(5):
-        hist = snapshots.snapshot_history(target_table)
-        if not hist:
-            # empty target: uncancelled removes can only arise from an
-            # inconsistent feed; adds append
+    with ckpt.Scope(spark) as cuts:
+        # same-batch cancellation (see docstring): net the two sides
+        # before touching the target; the cuts keep them stable across
+        # retries
+        net_add = cuts.cut(t_add.exceptAll(t_rem))
+        net_rem = cuts.cut(t_rem.exceptAll(t_add))
+        if net_rem.isEmpty():
             snapshot_sink_epoch(net_add, epoch_id, target_table, app_id)
             return
-        head = hist[-1]["version"]
-        current = snapshots.snapshot_read(spark, target_table, version=head)
-        survivors = current.exceptAll(net_rem.select(*current.columns))
-        removed = current.exceptAll(survivors)  # multiset ∩(current, net_rem)
-        new_table = survivors.unionByName(net_add.select(*current.columns))
-        change = removed.withColumn("_change_type", F.lit("delete")).unionByName(
-            net_add.select(*current.columns).withColumn(
-                "_change_type", F.lit("insert")
+
+        def attempt(head):
+            if head is None:
+                # empty target: uncancelled removes can only arise from
+                # an inconsistent feed; adds append
+                snapshot_sink_epoch(net_add, epoch_id, target_table, app_id)
+                return
+            current = snapshots.snapshot_read(spark, target_table, version=head)
+            survivors = current.exceptAll(net_rem.select(*current.columns))
+            removed = current.exceptAll(survivors)  # multiset ∩(current, net_rem)
+            new_table = survivors.unionByName(net_add.select(*current.columns))
+            change = removed.withColumn("_change_type", F.lit("delete")).unionByName(
+                net_add.select(*current.columns).withColumn(
+                    "_change_type", F.lit("insert")
+                )
             )
-        )
-        try:
             snapshots.snapshot_commit(
                 new_table,
                 target_table,
@@ -1618,13 +1561,8 @@ def cdf_apply_epoch(
                 change_data=change,
                 op_hint="delete",
             )
-            return
-        except snapshots.CommitConflict:
-            continue
-    raise RuntimeError(
-        f"cdf_apply_epoch lost the read-modify-write race 5 times at "
-        f"{target_table!r}."
-    )
+
+        snapshots.retry_on_conflict(target_table, "cdf_apply_epoch", attempt)
 
 
 def maintain_derived_table(
@@ -1680,6 +1618,54 @@ def maintain_derived_table(
     )
 
 
+def _fold_cdf_state(
+    batch_df: DataFrame,
+    epoch_id: int,
+    target_table: str,
+    app_id: str,
+    partial: Callable[[DataFrame], DataFrame],
+    negate: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    what: str,
+) -> None:
+    """The body :func:`rollup_cdf_epoch` and :func:`agg_view_cdf_epoch`
+    share: reduce the change-feed batch to ``merge(partial(adds),
+    negate(partial(removes)))``, then commit ``merge(head state,
+    delta)`` as one version of ``target_table`` with txn dedup, rows
+    whose count returns to zero dropped. The delta is cut once, so
+    every retry of ``snapshots.retry_on_conflict`` merges the same
+    rows; an empty target takes the delta as an append."""
+    from pyspark.sql import functions as F
+
+    from pubg_data_pipeline_spark.sources import snapshots
+
+    if batch_df.isEmpty():
+        return
+    spark = batch_df.sparkSession
+    txn = (app_id, int(epoch_id))
+    adds = batch_df.filter(F.col("_change_type").isin(*_CDF_ADDS))
+    removes = batch_df.filter(F.col("_change_type").isin(*_CDF_REMOVES))
+    with ckpt.Scope(spark) as cuts:
+        delta = cuts.cut(merge(partial(adds), negate(partial(removes))))
+
+        def attempt(head):
+            if head is None:
+                snapshots.snapshot_commit(
+                    delta.filter(F.col("n") != 0), target_table, mode="append", txn=txn
+                )
+                return
+            current = snapshots.snapshot_read(spark, target_table, version=head)
+            snapshots.snapshot_commit(
+                merge(current, delta).filter(F.col("n") != 0),
+                target_table,
+                mode="overwrite",
+                expected_parent=head,
+                txn=txn,
+            )
+
+        snapshots.retry_on_conflict(target_table, what, attempt)
+
+
 def rollup_cdf_epoch(
     batch_df: DataFrame,
     epoch_id: int,
@@ -1702,49 +1688,17 @@ def rollup_cdf_epoch(
     trigger, never O(history). Hours whose count returns to zero drop
     out of the state entirely. (Averages stay derive-at-read:
     ``incremental.finalize_hourly``.)"""
-    from pyspark.sql import functions as F
-
     from pubg_data_pipeline_spark.operators import incremental
-    from pubg_data_pipeline_spark.sources import snapshots
 
-    if batch_df.isEmpty():
-        return
-    adds = batch_df.filter(F.col("_change_type").isin(*_CDF_ADDS))
-    removes = batch_df.filter(F.col("_change_type").isin(*_CDF_REMOVES))
-    delta = incremental.merge_hourly_states(
-        incremental.partial_hourly_state(adds, ts_col, value_col),
-        incremental.negate_hourly_state(
-            incremental.partial_hourly_state(removes, ts_col, value_col)
-        ),
-    ).localCheckpoint()  # stable across RMW retries
-    spark = batch_df.sparkSession
-    for _ in range(5):
-        hist = snapshots.snapshot_history(target_table)
-        if not hist:
-            merged = delta.filter(F.col("n") != 0)
-            snapshots.snapshot_commit(
-                merged, target_table, mode="append", txn=(app_id, int(epoch_id))
-            )
-            return
-        head = hist[-1]["version"]
-        current = snapshots.snapshot_read(spark, target_table, version=head)
-        merged = incremental.merge_hourly_states(current, delta).filter(
-            F.col("n") != 0
-        )
-        try:
-            snapshots.snapshot_commit(
-                merged,
-                target_table,
-                mode="overwrite",
-                expected_parent=head,
-                txn=(app_id, int(epoch_id)),
-            )
-            return
-        except snapshots.CommitConflict:
-            continue
-    raise RuntimeError(
-        f"rollup_cdf_epoch lost the read-modify-write race 5 times at "
-        f"{target_table!r}."
+    _fold_cdf_state(
+        batch_df,
+        epoch_id,
+        target_table,
+        app_id,
+        lambda df: incremental.partial_hourly_state(df, ts_col, value_col),
+        incremental.negate_hourly_state,
+        incremental.merge_hourly_states,
+        "rollup_cdf_epoch",
     )
 
 
@@ -1806,52 +1760,17 @@ def agg_view_cdf_epoch(
     streaming twin of the oracle-paired `event_agg_view_retractions`
     query: a delete-bearing replay leaves the materialized view equal
     to the batch retraction arithmetic."""
-    from pyspark.sql import functions as F
-
     from pubg_data_pipeline_spark.operators import incremental
-    from pubg_data_pipeline_spark.sources import snapshots
 
-    if batch_df.isEmpty():
-        return
-    adds = batch_df.filter(F.col("_change_type").isin(*_CDF_ADDS))
-    removes = batch_df.filter(F.col("_change_type").isin(*_CDF_REMOVES))
-    delta = incremental.merge_keyed_states(
-        key_cols,
-        incremental.partial_keyed_state(adds, key_cols, value_col),
-        incremental.negate_keyed_state(
-            incremental.partial_keyed_state(removes, key_cols, value_col), key_cols
-        ),
-    ).localCheckpoint()
-    spark = batch_df.sparkSession
-    for _ in range(5):
-        hist = snapshots.snapshot_history(target_table)
-        if not hist:
-            snapshots.snapshot_commit(
-                delta.filter(F.col("n") != 0),
-                target_table,
-                mode="append",
-                txn=(app_id, int(epoch_id)),
-            )
-            return
-        head = hist[-1]["version"]
-        current = snapshots.snapshot_read(spark, target_table, version=head)
-        merged = incremental.merge_keyed_states(key_cols, current, delta).filter(
-            F.col("n") != 0
-        )
-        try:
-            snapshots.snapshot_commit(
-                merged,
-                target_table,
-                mode="overwrite",
-                expected_parent=head,
-                txn=(app_id, int(epoch_id)),
-            )
-            return
-        except snapshots.CommitConflict:
-            continue
-    raise RuntimeError(
-        f"agg_view_cdf_epoch lost the read-modify-write race 5 times at "
-        f"{target_table!r}."
+    _fold_cdf_state(
+        batch_df,
+        epoch_id,
+        target_table,
+        app_id,
+        lambda df: incremental.partial_keyed_state(df, key_cols, value_col),
+        lambda d: incremental.negate_keyed_state(d, key_cols),
+        lambda a, b: incremental.merge_keyed_states(key_cols, a, b),
+        "agg_view_cdf_epoch",
     )
 
 

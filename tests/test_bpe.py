@@ -73,6 +73,26 @@ def test_distributed_trainer_matches_local(spark, corpus_vocab):
     assert got == want
 
 
+def test_train_bpe_releases_its_checkpoints(spark, corpus_vocab, monkeypatch):
+    """Each vocabulary checkpoint is released once the next one has
+    materialized, and the last one when training returns."""
+    from pubg_data_pipeline_spark.operators import ckpt
+
+    before = ckpt.persisted_rdd_ids(spark)
+    live = []
+    real = ckpt.checkpoint
+
+    def spy(df, eager=True):
+        out = real(df, eager)
+        live.append(len(ckpt.persisted_rdd_ids(spark) - before))
+        return out
+
+    monkeypatch.setattr(ckpt, "checkpoint", spy)
+    train_bpe(corpus_vocab, num_merges=8)  # cuts: start, round 4, round 8
+    assert live == [1, 2, 2]  # a superseded cut never outlives the next one
+    assert ckpt.persisted_rdd_ids(spark) - before == set()
+
+
 def test_distributed_encoder_matches_local(spark):
     docs = spark.read.parquet(f"{SMOKE_SF_DIR}/documents.parquet")
     local_counts: dict[str, int] = {}

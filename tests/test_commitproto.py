@@ -1,10 +1,12 @@
 """The directory-swap half of commitproto: the side-dir naming rule,
-swap_dir's crash window and recover, and the guard that keeps every
-rename-aside swap in that one module."""
+swap_dir's crash window and recover, and the guards that keep every
+rename-aside swap, dynamic partition overwrite and snapshot retry loop
+in one function each."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -132,3 +134,28 @@ def test_os_rename_only_in_commitproto():
                     if "os.rename(" in f.read():
                         hits.add(os.path.relpath(full, PACKAGE))
     assert hits == {os.path.join("sources", "commitproto.py")}
+
+
+def _package_hits(pattern: str) -> list[str]:
+    hits = []
+    for root, _, files in os.walk(PACKAGE):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                full = os.path.join(root, name)
+                with open(full, encoding="utf-8") as f:
+                    n = len(re.findall(pattern, f.read()))
+                hits += [os.path.relpath(full, PACKAGE)] * n
+    return hits
+
+
+def test_partition_overwrite_only_in_io_overwrite_partitions():
+    """Every epoch-partition write goes through io.overwrite_partitions."""
+    assert _package_hits(r"partitionOverwriteMode") == [os.path.join("sources", "io.py")]
+
+
+def test_one_commit_conflict_retry_loop():
+    """Every snapshot read-modify-write retries through
+    snapshots.retry_on_conflict, the only handler of CommitConflict."""
+    assert _package_hits(r"except (?:snapshots\.)?CommitConflict") == [
+        os.path.join("sources", "snapshots.py")
+    ]

@@ -174,3 +174,18 @@ def test_epoch_sinks_reject_remote_uris(spark):
             spark.createDataFrame([], "doc_id long, text string"),
             0, "s3a://b/idx", "s3a://b/corpus",
         )
+
+
+def test_dim_upsert_epoch_releases_its_checkpoint(spark, tmp_path):
+    """The merged dimension's cut dies with the epoch that took it."""
+    from pubg_data_pipeline_spark.operators import ckpt
+
+    dim = str(tmp_path / "dim")
+    before = ckpt.persisted_rdd_ids(spark)
+    for epoch in range(3):
+        batch = spark.createDataFrame(
+            [("a", epoch, float(epoch)), (f"k{epoch}", 0, 1.0)], "k string, ver long, v double"
+        )
+        app.dim_upsert_epoch(batch, epoch, dim, ["k"], "ver")
+        assert ckpt.persisted_rdd_ids(spark) - before == set()
+    assert spark.read.parquet(dim).count() == 4

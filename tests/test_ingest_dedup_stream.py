@@ -87,3 +87,17 @@ def test_ingest_dedup_epoch_retry_is_idempotent(spark, tmp_path):
     assert got == [1, 2, 4]  # doc 3 is a cross-epoch dup of doc 1; no double-appends
     idx = spark.read.parquet(index)
     assert idx.count() == idx.select("fingerprint").distinct().count() == 3
+
+
+def test_ingest_dedup_epoch_releases_its_checkpoint(spark, tmp_path):
+    """The survivors' cut dies with the epoch that took it: after each
+    epoch no RDD it registered is still persisted."""
+    from pubg_data_pipeline_spark.operators import ckpt
+
+    index, corpus = str(tmp_path / "idx"), str(tmp_path / "corp")
+    before = ckpt.persisted_rdd_ids(spark)
+    for epoch, rows in enumerate([[(1, "alpha")], [(2, "alpha"), (3, "beta")], [(4, "gamma")]]):
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        app.ingest_dedup_epoch(batch, epoch, index, corpus)
+        assert ckpt.persisted_rdd_ids(spark) - before == set()
+    assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [1, 3, 4]

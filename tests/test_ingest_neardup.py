@@ -163,3 +163,44 @@ def test_streaming_ingest_neardup_across_batches_and_runs(spark, tmp_path):
     q2 = app.streaming_ingest_neardup(stream, index, corpus, available_now=True, checkpoint=ckpt)
     q2.awaitTermination(120)
     assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [1, 3, 5]
+
+
+def _staged_only(root, table) -> None:
+    """What a dynamic overwrite that died mid-job leaves behind: its
+    files under ``root/.spark-staging-*``, which Spark's reader never
+    lists."""
+    import pyarrow.parquet as pq
+
+    staged = root / ".spark-staging-abc" / "__epoch=0"
+    staged.mkdir(parents=True)
+    pq.write_table(table, str(staged / "part-00000.parquet"))
+
+
+def test_ingest_neardup_epoch_survives_a_crashed_index_write(spark, tmp_path):
+    """An index dir whose only parquet file sits under a crashed
+    write's staging dir holds nothing a reader can see; the epoch and
+    its replay must treat it as empty, not infer a schema from it."""
+    import pyarrow as pa
+
+    index, corpus = tmp_path / "idx", str(tmp_path / "corp")
+    _staged_only(index, pa.table({"band_idx": [0], "band_key": [10], "keeper_id": [9]}))
+    b0 = spark.createDataFrame(
+        [(1, BASE), (2, BASE), (3, OTHER)], "doc_id long, text string"
+    )
+    app.ingest_neardup_epoch(b0, 0, str(index), corpus)
+    app.ingest_neardup_epoch(b0, 0, str(index), corpus)  # replay
+    assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [1, 3]
+
+
+def test_has_data_files_lists_what_spark_lists(tmp_path):
+    import pyarrow as pa
+
+    t = pa.table({"x": [1]})
+    assert not app._has_data_files(str(tmp_path / "missing"))
+    _staged_only(tmp_path / "t", t)
+    (tmp_path / "t" / "_SUCCESS").touch()
+    (tmp_path / "t" / ".part.parquet").touch()
+    assert not app._has_data_files(str(tmp_path / "t"))
+    (tmp_path / "t" / "__epoch=3").mkdir()
+    (tmp_path / "t" / "__epoch=3" / "part-0.parquet").touch()
+    assert app._has_data_files(str(tmp_path / "t"))

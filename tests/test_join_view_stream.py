@@ -129,3 +129,26 @@ def test_join_view_epoch_crash_between_view_and_base_writes(spark, tmp_path):
     )
     assert got == want
     assert (1, "l1", "r1b") in got and (3, "l3", "r3") in got
+
+
+def test_join_view_epoch_survives_a_crashed_base_write(spark, tmp_path):
+    """A left base whose only parquet file sits under a crashed
+    dynamic overwrite's ``.spark-staging-*`` dir is empty to a reader;
+    ``_epoch_table`` must return the empty template, not infer a
+    schema, on the epoch and on its replay."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = {n: tmp_path / n for n in ("left", "right", "view")}
+    staged = paths["left"] / ".spark-staging-abc" / "__epoch=0"
+    staged.mkdir(parents=True)
+    pq.write_table(pa.table({"k": [9], "lv": ["stale"]}), str(staged / "part-00000.parquet"))
+    batch = spark.createDataFrame(
+        [("left", 1, "l1", None), ("right", 1, None, "r1")],
+        "side string, k long, lv string, rv string",
+    )
+    args = (str(paths["left"]), str(paths["right"]), str(paths["view"]),
+            ["k"], ["k", "lv"], ["k", "rv"])
+    app.join_view_epoch(batch, 1, *args)
+    app.join_view_epoch(batch, 1, *args)  # replay
+    assert _view_rows(spark, paths["view"]) == [(1, "l1", "r1")]

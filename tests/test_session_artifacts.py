@@ -3,9 +3,9 @@
 Derived artifacts (pair tables, the shingle table, IVF/PQ indexes,
 loaded table plans) are memoized on the SparkSession object through
 ``session.artifact``, so a stopped session's frames die with it. Every
-lineage cut under ``operators/``, ``plans/`` and ``functions/`` goes
-through ``operators/ckpt.checkpoint``, the one place that chooses
-between a local and a reliable checkpoint."""
+lineage cut under ``operators/``, ``plans/``, ``functions/`` and
+``streaming/`` goes through ``operators/ckpt.checkpoint``, the one
+place that chooses between a local and a reliable checkpoint."""
 
 from __future__ import annotations
 
@@ -79,10 +79,11 @@ def test_artifact_memo_is_per_session(spark):
 
 def test_checkpoints_only_in_ckpt():
     """``.localCheckpoint(`` and ``.checkpoint(`` appear under
-    operators/, plans/ and functions/ only in operators/ckpt.py."""
+    operators/, plans/, functions/ and streaming/ only in
+    operators/ckpt.py."""
     offenders = [
         f"{path.relative_to(PKG)}:{lineno}"
-        for sub in ("operators", "plans", "functions")
+        for sub in ("operators", "plans", "functions", "streaming")
         for path in sorted((PKG / sub).rglob("*.py"))
         if path != PKG / "operators" / "ckpt.py"
         for lineno, line in enumerate(path.read_text().splitlines(), 1)

@@ -4,10 +4,31 @@ executor-side file reads, append-only fail-loud."""
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from pubg_data_pipeline_spark.sources import snapshot_cdf, snapshots
+
+
+@pytest.fixture(autouse=True)
+def _epochs_never_read_manifest_history(monkeypatch):
+    """The change-feed epochs in streaming/app.py learn the target's
+    head from the manifest listing (snapshots.retry_on_conflict).
+    snapshot_history opens every manifest, so calling it per epoch
+    makes epoch cost grow with the table's age; any call made from
+    streaming/app.py fails the test that caused it."""
+    from pubg_data_pipeline_spark.streaming import app
+
+    real = snapshots.snapshot_history
+
+    def guarded(path):
+        if sys._getframe(1).f_globals.get("__name__") == app.__name__:
+            raise AssertionError("streaming/app.py read the whole manifest history")
+        return real(path)
+
+    monkeypatch.setattr(snapshots, "snapshot_history", guarded)
 
 
 def _df(spark, lo, hi):
