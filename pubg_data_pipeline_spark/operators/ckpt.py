@@ -53,10 +53,10 @@ _CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 
 
 def persisted_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of every RDD currently registered with the block manager.
-    localCheckpoint registers its backing RDD here at CALL time (even
-    eager=False), so diffing before/after a checkpoint identifies
-    exactly the blocks that checkpoint owns."""
+    """Ids of every RDD currently registered with the block manager,
+    by every thread of the application. A before/after diff of this
+    set is therefore no measure of what one checkpoint owns while
+    other queries run; :func:`checkpoint` reads its id off the frame."""
     m = spark.sparkContext._jsc.sc().getPersistentRDDs()
     it = m.keysIterator()
     out: set[int] = set()
@@ -91,18 +91,20 @@ def checkpoint(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
 
     Returns the checkpointed frame and the block-manager RDD ids the
     checkpoint registered, the handle :func:`release_rdds` takes once
-    the frame is dead. Reliable checkpoints register no blocks, so
-    their set is empty."""
+    the frame is dead. A local checkpoint registers exactly one RDD,
+    the one backing the returned frame's ``LogicalRDD`` plan, so its id
+    is read off that frame: blocks that other threads register during
+    an eager cut's job (another query's checkpoint, a cache first
+    built then) are never counted as this cut's. Reliable checkpoints
+    register no blocks, so their set is empty."""
     spark = df.sparkSession
-    before = persisted_rdd_ids(spark)
     ckpt_dir = reliable_checkpoint_dir()
     if ckpt_dir is None:
         out = df.localCheckpoint(eager=eager)
-    else:
-        if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-            spark.sparkContext.setCheckpointDir(ckpt_dir)
-        out = df.checkpoint(eager=eager)
-    return out, persisted_rdd_ids(spark) - before
+        return out, {out._jdf.queryExecution().logical().rdd().id()}
+    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        spark.sparkContext.setCheckpointDir(ckpt_dir)
+    return df.checkpoint(eager=eager), set()
 
 
 def barrier(df: DataFrame, site: str, eager: bool = False) -> DataFrame:
@@ -133,9 +135,10 @@ class Scope:
     through :func:`checkpoint` and releases every block the scope
     took when the ``with`` block exits, normally or by an exception.
     Frames cut here must not be used after that. There is no site key,
-    unlike :func:`barrier`: two streams running the same epoch body
-    against different paths each own their blocks, so neither can
-    release the other's mid-epoch."""
+    unlike :func:`barrier`, and a scope holds only the ids its own
+    cuts return: two streams running the same epoch body against
+    different paths each own their blocks, so neither can release the
+    other's mid-epoch."""
 
     def __init__(self, spark: SparkSession):
         self._spark = spark

@@ -58,6 +58,31 @@ def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
     )
 
 
+def hidden_name(name: str) -> bool:
+    """Whether Spark's file index skips a path component called
+    ``name``: names starting with ``.``, and names starting with ``_``
+    unless they hold ``=`` (``__epoch=3`` is a partition, ``_SUCCESS``
+    is not data). Every driver-side listing of data files here uses
+    this one rule, so it sees what a Spark reader sees."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def has_data_files(path: str) -> bool:
+    """Whether a Spark parquet reader of ``path`` would list a data
+    file, the test a sink makes before reading its stored state (schema
+    inference fails on a directory without one). A dynamic overwrite
+    that dies mid-job leaves its files under ``path/.spark-staging-*``;
+    counted, they would send every later epoch into schema inference
+    over a directory Spark sees as empty."""
+    import os
+
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden_name(d)]
+        if any(f.endswith(".parquet") and not hidden_name(f) for f in files):
+            return True
+    return False
+
+
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,

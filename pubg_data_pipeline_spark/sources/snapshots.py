@@ -75,6 +75,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pubg_data_pipeline_spark.sources.io import hidden_name
+
 _COMMIT_RETRIES = 20
 
 
@@ -114,7 +116,7 @@ def _list_part_files(data_dir: str) -> list[str]:
     return sorted(
         os.path.join(data_dir, f)
         for f in os.listdir(data_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+        if f.endswith(".parquet") and not hidden_name(f)
     )
 
 

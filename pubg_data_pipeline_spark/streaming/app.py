@@ -39,27 +39,6 @@ def _require_local_path(path: str, what: str) -> None:
     )
 
 
-def _has_data_files(path: str) -> bool:
-    """Whether a Spark parquet reader of ``path`` would list a data
-    file, the test a sink makes before reading its stored state (schema
-    inference fails on a directory without one). It skips what Spark's
-    file index skips: names starting with ``.``, and names starting
-    with ``_`` unless they hold ``=`` (``__epoch=3`` is a partition,
-    ``_SUCCESS`` is not data). A dynamic overwrite that dies mid-job
-    leaves its files under ``path/.spark-staging-*``; counted, they
-    would send every later epoch into schema inference over a
-    directory Spark sees as empty."""
-
-    def hidden(name: str) -> bool:
-        return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-    for _, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not hidden(d)]
-        if any(f.endswith(".parquet") and not hidden(f) for f in files):
-            return True
-    return False
-
-
 def _compact(spark, root: str, what: str, fold: Callable[[DataFrame], DataFrame]) -> None:
     """Fold every ``__epoch`` partition of the state table at ``root``
     into one ``__epoch=0`` partition: the one compaction protocol of
@@ -353,7 +332,7 @@ def ingest_dedup_epoch(
     spark = batch_df.sparkSession
     batch = batch_df.withColumn("__fp", doc_fingerprint(F.col(text_col)))
     # With nothing indexed there is nothing to anti-join.
-    if _has_data_files(index_path):
+    if io.has_data_files(index_path):
         # Explicit schema: no schema-inference job per epoch.
         idx = (
             spark.read.schema("fingerprint string")
@@ -450,7 +429,7 @@ def ingest_neardup_epoch(
     spark = batch_df.sparkSession
     idx = (
         spark.read.parquet(index_path).select("band_idx", "band_key")
-        if _has_data_files(index_path)
+        if io.has_data_files(index_path)
         else None
     )
     bt = band_table(batch_df, text_col, id_col, num_hashes, bands, shingle_n)
@@ -695,13 +674,13 @@ def _epoch_table(spark, path: str, before_epoch: int, template: DataFrame) -> Da
     must never see its own previous partial output as base state. The
     ``__epoch < N`` predicate prunes on the partition column, so a
     replay reads exactly the directories it would have seen the first
-    time. No data file (``_has_data_files``) -> empty frame with the
+    time. No data file (``io.has_data_files``) -> empty frame with the
     template's schema (parquet schema inference cannot handle a bare
     dir)."""
     from pyspark.sql import functions as F
 
     commitproto.recover(path)  # a crashed compaction left the state aside
-    if not _has_data_files(path):
+    if not io.has_data_files(path):
         return template.limit(0)
     return (
         spark.read.parquet(path)

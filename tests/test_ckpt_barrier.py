@@ -64,6 +64,35 @@ def test_barrier_leaves_rdds_recorded_under_another_context(spark):
         ckpt.release_rdds(spark, live_ids)
 
 
+def test_scope_keeps_blocks_other_queries_register_during_its_cut(spark, monkeypatch):
+    """An eager cut runs a whole job; a checkpoint another query takes
+    meanwhile (several streams share one session) is that query's, so
+    the scope must leave it persisted when it releases its own."""
+    frame_cls = type(spark.range(1))  # the classic DataFrame subclass
+    real = frame_cls.localCheckpoint
+    theirs = []
+
+    def racing(self, *args, **kwargs):
+        if not theirs:  # the other query cuts while this cut runs
+            theirs.append(real(spark.range(50), eager=True))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", racing)
+    with ckpt.Scope(spark) as cuts:
+        mine = cuts.cut(spark.range(10))
+        assert mine.count() == 10
+    monkeypatch.undo()
+    mine_id = mine._jdf.queryExecution().logical().rdd().id()
+    theirs_id = theirs[0]._jdf.queryExecution().logical().rdd().id()
+    try:
+        live = ckpt.persisted_rdd_ids(spark)
+        assert mine_id not in live
+        assert theirs_id in live
+        assert theirs[0].count() == 50
+    finally:
+        ckpt.release_rdds(spark, {theirs_id})
+
+
 def test_barrier_reliable_mode_preserves_results(spark, tmp_path, monkeypatch):
     """With SPARK_GRAFT_CHECKPOINT_DIR set (cluster deployments) the
     barrier routes through a reliable DataFrame.checkpoint: results

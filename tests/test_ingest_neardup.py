@@ -193,14 +193,23 @@ def test_ingest_neardup_epoch_survives_a_crashed_index_write(spark, tmp_path):
 
 
 def test_has_data_files_lists_what_spark_lists(tmp_path):
+    """One hidden-name rule, shared by the sinks' stored-state probe
+    and the snapshot tables' part-file listing."""
     import pyarrow as pa
 
+    from pubg_data_pipeline_spark.sources import io, snapshots
+
     t = pa.table({"x": [1]})
-    assert not app._has_data_files(str(tmp_path / "missing"))
+    assert not io.has_data_files(str(tmp_path / "missing"))
     _staged_only(tmp_path / "t", t)
     (tmp_path / "t" / "_SUCCESS").touch()
     (tmp_path / "t" / ".part.parquet").touch()
-    assert not app._has_data_files(str(tmp_path / "t"))
+    assert not io.has_data_files(str(tmp_path / "t"))
+    assert snapshots._list_part_files(str(tmp_path / "t")) == []
     (tmp_path / "t" / "__epoch=3").mkdir()
     (tmp_path / "t" / "__epoch=3" / "part-0.parquet").touch()
-    assert app._has_data_files(str(tmp_path / "t"))
+    assert io.has_data_files(str(tmp_path / "t"))
+    (tmp_path / "t" / "part-1.parquet").touch()
+    assert snapshots._list_part_files(str(tmp_path / "t")) == [
+        str(tmp_path / "t" / "part-1.parquet")
+    ]
