@@ -23,20 +23,38 @@ from pubg_data_pipeline_spark.sources import commitproto, io
 from pubg_data_pipeline_spark.streaming import etl, sinks
 
 
-def _require_local_path(path: str, what: str) -> None:
-    """The state-swapping epoch bodies below use driver-side
-    filesystem operations (isdir / rename / rmtree), which silently
-    do the wrong thing against hdfs://, s3a://, etc. (isdir is always
-    False -> history checks skip, renames fail). Fail loudly instead:
-    on a cluster these sinks target a transactional table format
-    (Delta/Iceberg MERGE INTO / epoch-partitioned commits) — the
-    Spark plan inside each epoch is identical, only the commit
-    mechanism changes."""
-    commitproto.require_local_path(
-        path,
-        what,
-        "deploy against a transactional table format for object-store/HDFS paths.",
-    )
+def _open_roots(what: str, *roots: str) -> None:
+    """Open the state roots ``what`` is about to read or rewrite.
+
+    The state-swapping bodies below use driver-side filesystem
+    operations (isdir / rename / rmtree), which silently do the wrong
+    thing against hdfs://, s3a://, etc. (isdir is always False ->
+    history checks skip, renames fail). So every root must first be a
+    local path: fail loudly otherwise, before ANY root is touched. On a
+    cluster these sinks target a transactional table format
+    (Delta/Iceberg MERGE INTO / epoch-partitioned commits) — the Spark
+    plan inside each epoch is identical, only the commit mechanism
+    changes. Then ``commitproto.recover`` undoes a swap or compaction
+    that crashed between its two renames; on a root that is never
+    swapped that is one isdir check."""
+    for root in roots:
+        commitproto.require_local_path(
+            root,
+            what,
+            "deploy against a transactional table format for object-store/HDFS paths.",
+        )
+    for root in roots:
+        commitproto.recover(root)
+
+
+def _open_epoch(batch_df: DataFrame, what: str, *roots: str) -> bool:
+    """The start every epoch body here shares: :func:`_open_roots`,
+    then False for an idle trigger (an empty micro-batch), which the
+    body skips without writing — no O(state) rewrite, no empty
+    partition, no snapshot version per quiet minute. Skipping is
+    replay-safe: a replayed empty epoch is still empty."""
+    _open_roots(what, *roots)
+    return not batch_df.isEmpty()
 
 
 def _compact(spark, root: str, what: str, fold: Callable[[DataFrame], DataFrame]) -> None:
@@ -57,8 +75,7 @@ def _compact(spark, root: str, what: str, fold: Callable[[DataFrame], DataFrame]
     again beside epoch 0."""
     from pyspark.sql import functions as F
 
-    _require_local_path(root, what)
-    commitproto.recover(root)
+    _open_roots(what, root)
     tmp = commitproto.tmp_dir(root, "compact")
     with ckpt.Scope(spark) as cuts:
         merged = cuts.cut(
@@ -191,15 +208,13 @@ def rollup_merge_epoch(
 
     from pubg_data_pipeline_spark.operators import incremental
 
-    _require_local_path(state_path, "rollup_merge_epoch")
-    commitproto.recover(state_path)
+    if not _open_epoch(batch_df, "rollup_merge_epoch", state_path):
+        return
     marker = os.path.join(state_path, "_last_epoch")
     if os.path.isfile(marker):
         with open(marker) as f:
             if int(json.load(f)["epoch"]) >= int(epoch_id):
                 return  # at-least-once replay of an absorbed epoch
-    if batch_df.isEmpty():
-        return  # idle trigger: don't rewrite O(state) for a no-op
     spark = batch_df.sparkSession
     partial = incremental.partial_hourly_state(batch_df, ts_col, value_col)
     if os.path.isdir(state_path):
@@ -324,11 +339,8 @@ def ingest_dedup_epoch(
     from pubg_data_pipeline_spark.functions.text import doc_fingerprint
     from pubg_data_pipeline_spark.operators.dedup import exact_dedup
 
-    _require_local_path(index_path, "ingest_dedup_epoch")
-    _require_local_path(corpus_path, "ingest_dedup_epoch")
-    commitproto.recover(index_path)  # a crashed compaction left the index aside
-    if batch_df.isEmpty():
-        return  # idle trigger: skip the O(index) scan and empty writes
+    if not _open_epoch(batch_df, "ingest_dedup_epoch", index_path, corpus_path):
+        return
     spark = batch_df.sparkSession
     batch = batch_df.withColumn("__fp", doc_fingerprint(F.col(text_col)))
     # With nothing indexed there is nothing to anti-join.
@@ -421,11 +433,8 @@ def ingest_neardup_epoch(
 
     from pubg_data_pipeline_spark.operators.dedup import band_table, neardup_survivor_bands
 
-    _require_local_path(index_path, "ingest_neardup_epoch")
-    _require_local_path(corpus_path, "ingest_neardup_epoch")
-    commitproto.recover(index_path)  # a crashed compaction left the index aside
-    if batch_df.isEmpty():
-        return  # idle trigger: skip the O(index) scan and empty writes
+    if not _open_epoch(batch_df, "ingest_neardup_epoch", index_path, corpus_path):
+        return
     spark = batch_df.sparkSession
     idx = (
         spark.read.parquet(index_path).select("band_idx", "band_key")
@@ -512,19 +521,17 @@ def dim_upsert_epoch(
     ``commitproto.swap_dir`` (move dim aside, rename tmp onto dim, drop
     the aside) with crash recovery at epoch start — no window in which
     the only copy of the dimension is deleted. Local filesystem only (see
-    ``_require_local_path``); a cluster deployment targets a
+    ``_open_roots``); a cluster deployment targets a
     transactional table format's MERGE INTO with the identical plan.
+    An idle trigger writes nothing, so a first epoch never materializes
+    a fileless empty table (unreadable by schema inference).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    _require_local_path(dim_path, "dim_upsert_epoch")
-    spark = batch_df.sparkSession
-    commitproto.recover(dim_path)
-    if batch_df.isEmpty():
-        # nothing to merge; also avoids materializing a fileless empty
-        # table on the very first epoch (unreadable by schema inference)
+    if not _open_epoch(batch_df, "dim_upsert_epoch", dim_path):
         return
+    spark = batch_df.sparkSession
     upd = batch_df.withColumn("__src", F.lit(1))
     if os.path.isdir(dim_path):
         # the stored dimension has the batch's schema; declaring it
@@ -627,11 +634,9 @@ def topk_search_epoch(
     Same rename-aside swap + recovery as the other state sinks."""
     from pubg_data_pipeline_spark.operators import similarity
 
-    _require_local_path(state_path, "topk_search_epoch")
-    spark = batch_df.sparkSession
-    commitproto.recover(state_path)
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "topk_search_epoch", state_path):
         return
+    spark = batch_df.sparkSession
     batch_topk = similarity.brute_force_top_k(
         batch_df, queries_df, id_col=id_col, vec_col=vec_col, k=k, round_digits=6
     )
@@ -676,10 +681,9 @@ def _epoch_table(spark, path: str, before_epoch: int, template: DataFrame) -> Da
     replay reads exactly the directories it would have seen the first
     time. No data file (``io.has_data_files``) -> empty frame with the
     template's schema (parquet schema inference cannot handle a bare
-    dir)."""
+    dir). The caller's ``_open_epoch`` has already recovered ``path``."""
     from pyspark.sql import functions as F
 
-    commitproto.recover(path)  # a crashed compaction left the state aside
     if not io.has_data_files(path):
         return template.limit(0)
     return (
@@ -717,13 +721,11 @@ def join_view_epoch(
     of epoch N recomputes exactly the same rows and rewrites exactly
     its own partitions: exactly-once effective semantics without a
     transactional table format. Local filesystem only (see
-    ``_require_local_path``); on a cluster the same plan targets a
+    ``_open_roots``); on a cluster the same plan targets a
     lakehouse table's dynamic overwrite."""
     from pyspark.sql import functions as F
 
-    for p in (left_path, right_path, view_path):
-        _require_local_path(p, "join_view_epoch")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "join_view_epoch", left_path, right_path, view_path):
         return
     spark = batch_df.sparkSession
     dl = batch_df.filter(F.col(side_col) == "left").select(*left_cols)
@@ -799,12 +801,10 @@ def heavy_hitters_epoch(
 
     from pubg_data_pipeline_spark.operators import incremental
 
-    _require_local_path(state_path, "heavy_hitters_epoch")
-    commitproto.recover(f"{state_path}/summary")
-    commitproto.recover(f"{state_path}/totals")
+    _open_roots("heavy_hitters_epoch", f"{state_path}/summary", f"{state_path}/totals")
     summary, n_rows = incremental.partial_mg_state(batch_df, key_cols, counters)
     if n_rows == 0:
-        return  # idle trigger
+        return  # idle trigger, told by the summary job itself (no isEmpty job)
     # totals FIRST: a crash between the two commits then leaves the
     # bound transiently too LOOSE (n_rows without weights) instead of
     # invalid/negative (weights without n_rows would make
@@ -952,9 +952,7 @@ def span_flag_epoch(
 
     from pubg_data_pipeline_spark.functions.text import _ngram_array, word_tokens
 
-    _require_local_path(index_path, "span_flag_epoch")
-    _require_local_path(spans_path, "span_flag_epoch")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "span_flag_epoch", index_path, spans_path):
         return
     spark = batch_df.sparkSession
     toks = word_tokens(F.lower(F.col(text_col)))
@@ -1078,7 +1076,7 @@ def save_drift_baseline(df: DataFrame, key, key_name: str, baseline_path: str) -
     exactly as in operators.profile.distribution_drift."""
     from pyspark.sql import functions as F
 
-    _require_local_path(baseline_path, "save_drift_baseline")
+    _open_roots("save_drift_baseline", baseline_path)
     df.groupBy(key.alias(key_name)).agg(F.count(F.lit(1)).alias("n_base")).write.mode(
         "overwrite"
     ).parquet(baseline_path)
@@ -1094,8 +1092,7 @@ def drift_epoch(
     the stored state is raw mergeable counts, never derived scores."""
     from pyspark.sql import functions as F
 
-    _require_local_path(state_path, "drift_epoch")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "drift_epoch", state_path):
         return
     io.overwrite_partitions(
         batch_df.groupBy(key.alias(key_name))
@@ -1203,9 +1200,7 @@ def dlq_etl_epoch(
 
     from pubg_data_pipeline_spark.streaming import etl
 
-    _require_local_path(good_path, "dlq_etl_epoch")
-    _require_local_path(dlq_path, "dlq_etl_epoch")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "dlq_etl_epoch", good_path, dlq_path):
         return
     batch_df.persist()
     try:
@@ -1257,11 +1252,11 @@ def snapshot_sink_epoch(
     Empty micro-batches commit nothing: an idle 60 s trigger would
     otherwise mint ~1440 versions/day whose manifests each re-serialize
     the full table file list — manifest history growing with wall-clock
-    instead of data. Skipping is replay-safe (a replayed empty epoch is
-    still empty; the txn record only matters for epochs that wrote)."""
+    instead of data (the txn record only matters for epochs that
+    wrote)."""
     from pubg_data_pipeline_spark.sources import snapshots
 
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "snapshot_sink_epoch", table_path):
         return
     snapshots.snapshot_commit(
         batch_df, table_path, mode="append", txn=(app_id, int(epoch_id))
@@ -1281,7 +1276,7 @@ def streaming_to_snapshot(
     the stream appends, and replays dedup via the per-epoch txn record.
     Vacuum retention must exceed the source's replay horizon (see
     snapshots.snapshot_vacuum)."""
-    _require_local_path(table_path, "streaming_to_snapshot")
+    _open_roots("streaming_to_snapshot", table_path)
     return sinks.foreach_batch_sink(
         stream,
         lambda df, eid: snapshot_sink_epoch(df, eid, table_path, app_id),
@@ -1312,9 +1307,7 @@ def cms_epoch(
     MG (heavy_hitters_epoch) answers "which keys are frequent";
     the CMS answers point lookups — "how often did THIS key occur" —
     for keys known only at query time, in the same bounded state."""
-    _require_local_path(state_path, "cms_epoch")
-    commitproto.recover(f"{state_path}/grid")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "cms_epoch", f"{state_path}/grid"):
         return
 
     from pyspark.sql import functions as F
@@ -1399,8 +1392,7 @@ def moments_epoch(
     vector — the streaming twin of `embedding_covariance` /
     `embedding_pca_diagnostics`, and the mechanism that keeps an ANN
     index's whitening/quantizer statistics fresh as the corpus grows."""
-    _require_local_path(state_path, "moments_epoch")
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "moments_epoch", f"{state_path}/moments"):
         return
 
     from pyspark.sql import functions as F
@@ -1491,7 +1483,7 @@ def cdf_apply_epoch(
 
     from pubg_data_pipeline_spark.sources import snapshots
 
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, "cdf_apply_epoch"):
         return
     data_cols = [
         c for c in batch_df.columns if c not in ("_change_type", "_commit_version")
@@ -1544,6 +1536,24 @@ def cdf_apply_epoch(
         snapshots.retry_on_conflict(target_table, "cdf_apply_epoch", attempt)
 
 
+def _change_feed(
+    spark, source_table: str, target_table: str, starting_version: str, what: str
+) -> DataFrame:
+    """``source_table``'s change feed as a stream (sources/snapshot_cdf
+    — offsets are manifest versions), for the query ``what`` that
+    maintains the snapshot table ``target_table``, opened first."""
+    from pubg_data_pipeline_spark.sources import snapshot_cdf
+
+    _open_roots(what, target_table)
+    snapshot_cdf.register(spark)
+    return (
+        spark.readStream.format("snapshot_cdf")
+        .option("path", source_table)
+        .option("starting_version", starting_version)
+        .load()
+    )
+
+
 def maintain_derived_table(
     spark,
     source_table: str,
@@ -1576,19 +1586,10 @@ def maintain_derived_table(
     (see :func:`cdf_apply_epoch`); only rewrites that predate change
     recording, or a vacuumed offset, still fail the query loudly —
     restart from ``starting_version="latest"`` after rebuilding."""
-    from pubg_data_pipeline_spark.sources import snapshot_cdf
-
-    _require_local_path(target_table, "maintain_derived_table")
-    snapshot_cdf.register(spark)
-    stream = (
-        spark.readStream.format("snapshot_cdf")
-        .option("path", source_table)
-        .option("starting_version", starting_version)
-        .load()
-    )
-
     return sinks.foreach_batch_sink(
-        stream,
+        _change_feed(
+            spark, source_table, target_table, starting_version, "maintain_derived_table"
+        ),
         lambda df, eid: cdf_apply_epoch(df, eid, target_table, app_id, transform),
         trigger_seconds,
         output_mode="append",
@@ -1618,7 +1619,7 @@ def _fold_cdf_state(
 
     from pubg_data_pipeline_spark.sources import snapshots
 
-    if batch_df.isEmpty():
+    if not _open_epoch(batch_df, what):
         return
     spark = batch_df.sparkSession
     txn = (app_id, int(epoch_id))
@@ -1701,18 +1702,10 @@ def maintain_rollup_table(
     per-epoch txn dedup on the target's manifest log. Read the result
     with ``incremental.finalize_hourly(snapshots.snapshot_read(spark,
     target_table))``."""
-    from pubg_data_pipeline_spark.sources import snapshot_cdf
-
-    _require_local_path(target_table, "maintain_rollup_table")
-    snapshot_cdf.register(spark)
-    stream = (
-        spark.readStream.format("snapshot_cdf")
-        .option("path", source_table)
-        .option("starting_version", starting_version)
-        .load()
-    )
     return sinks.foreach_batch_sink(
-        stream,
+        _change_feed(
+            spark, source_table, target_table, starting_version, "maintain_rollup_table"
+        ),
         lambda df, eid: rollup_cdf_epoch(
             df, eid, target_table, app_id, ts_col, value_col
         ),
@@ -1770,18 +1763,10 @@ def maintain_agg_view_table(
     retraction-aware, exactly-once, O(changed rows + distinct keys)
     per trigger. The streaming form of the counting algorithm the
     `event_agg_view_retractions` oracle pins in batch."""
-    from pubg_data_pipeline_spark.sources import snapshot_cdf
-
-    _require_local_path(target_table, "maintain_agg_view_table")
-    snapshot_cdf.register(spark)
-    stream = (
-        spark.readStream.format("snapshot_cdf")
-        .option("path", source_table)
-        .option("starting_version", starting_version)
-        .load()
-    )
     return sinks.foreach_batch_sink(
-        stream,
+        _change_feed(
+            spark, source_table, target_table, starting_version, "maintain_agg_view_table"
+        ),
         lambda df, eid: agg_view_cdf_epoch(
             df, eid, target_table, app_id, key_cols, value_col
         ),

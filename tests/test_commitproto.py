@@ -1,10 +1,11 @@
 """The directory-swap half of commitproto: the side-dir naming rule,
 swap_dir's crash window and recover, and the guards that keep every
-rename-aside swap, dynamic partition overwrite and snapshot retry loop
-in one function each."""
+rename-aside swap, dynamic partition overwrite, snapshot retry loop
+and streaming epoch prologue in one function each."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -159,3 +160,33 @@ def test_one_commit_conflict_retry_loop():
     assert _package_hits(r"except (?:snapshots\.)?CommitConflict") == [
         os.path.join("sources", "snapshots.py")
     ]
+
+
+APP = os.path.join("streaming", "app.py")
+
+
+def test_one_idle_check():
+    """Every epoch body skips an idle trigger through app._open_epoch."""
+    assert _package_hits(r"batch_df\.isEmpty\(") == [APP]
+
+
+def test_one_local_path_gate_in_streaming_app():
+    """Every state root in streaming/app.py is checked by app._open_roots."""
+    assert [h for h in _package_hits(r"require_local_path\(") if h == APP] == [APP]
+
+
+def test_recover_only_in_open_roots_and_readers():
+    """Epoch bodies and compactions recover their roots through
+    app._open_roots; only the two readers (remote reads are legal there,
+    so they take no local-path gate) call commitproto.recover directly."""
+    pattern = r"commitproto\.recover\("
+    with open(os.path.join(PACKAGE, APP), encoding="utf-8") as f:
+        src = f.read()
+    callers = [
+        node.name
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+        for _ in re.findall(pattern, ast.get_source_segment(src, node))
+    ]
+    assert len(callers) == _package_hits(pattern).count(APP)
+    assert sorted(set(callers)) == ["_open_roots", "read_cms_estimates", "read_heavy_hitters"]

@@ -1,9 +1,18 @@
 """Streaming dimension maintenance (SCD1 MERGE in foreachBatch):
 cross-epoch latest-per-key semantics, within-batch tie-breaking, and
-idempotent replay of an epoch body."""
+idempotent replay of an epoch body; and the prologue every stateful
+epoch body shares (``app._open_epoch``): remote roots rejected before
+any root is touched, idle triggers writing nothing."""
 
 from __future__ import annotations
 
+import os
+from datetime import datetime
+
+import pytest
+from pyspark.sql import functions as F
+
+from pubg_data_pipeline_spark.sources import commitproto
 from pubg_data_pipeline_spark.streaming import app
 
 
@@ -141,8 +150,6 @@ def test_dim_upsert_recovers_from_crash_between_renames(spark, tmp_path):
     """Simulate a crash after `dim -> .dim.old` but before
     `tmp -> dim`: the next epoch must restore the previous state, not
     rebuild from the micro-batch alone."""
-    import os
-
     dim = tmp_path / "dim"
     app.dim_upsert_epoch(
         spark.createDataFrame([("a", 1, "x"), ("b", 1, "y")], "k string, ver long, v string"),
@@ -158,22 +165,100 @@ def test_dim_upsert_recovers_from_crash_between_renames(spark, tmp_path):
     assert not os.path.isdir(str(tmp_path / ".dim.old"))   # aside cleaned up
 
 
-def test_epoch_sinks_reject_remote_uris(spark):
-    import pytest
+#: Every epoch body that owns state roots: its batch schema, one row of
+#: it, one remote URI per root path argument, and the call that runs it
+#: on a batch and those paths.
+_ROOTED_EPOCHS = {
+    "rollup_merge_epoch": (
+        "ts timestamp, value double", (datetime(2024, 1, 1), 1.0), ("hdfs://nn/state",),
+        lambda s, b, p: app.rollup_merge_epoch(b, 0, *p),
+    ),
+    "ingest_dedup_epoch": (
+        "doc_id long, text string", (1, "a b c"), ("s3a://b/idx", "s3a://b/corpus"),
+        lambda s, b, p: app.ingest_dedup_epoch(b, 0, *p),
+    ),
+    "ingest_neardup_epoch": (
+        "doc_id long, text string", (1, "a b c"), ("s3a://b/bands", "s3a://b/corpus"),
+        lambda s, b, p: app.ingest_neardup_epoch(b, 0, *p),
+    ),
+    "dim_upsert_epoch": (
+        "k string, ver long, v double", ("a", 1, 1.0), ("s3a://bucket/dim",),
+        lambda s, b, p: app.dim_upsert_epoch(b, 0, *p, ["k"], "ver"),
+    ),
+    "topk_search_epoch": (
+        "vec_id long, embedding array<double>", (1, [1.0, 0.0]), ("s3a://b/topk",),
+        lambda s, b, p: app.topk_search_epoch(
+            b, 0, s.createDataFrame([], "query_id long, embedding array<double>"), *p
+        ),
+    ),
+    "join_view_epoch": (
+        "side string, k long, lv string, rv string", ("left", 1, "l", None),
+        ("s3a://b/left", "s3a://b/right", "s3a://b/view"),
+        lambda s, b, p: app.join_view_epoch(b, 0, *p, ["k"], ["k", "lv"], ["k", "rv"]),
+    ),
+    "heavy_hitters_epoch": (
+        "k string", ("a",), ("s3a://b/hh",),
+        lambda s, b, p: app.heavy_hitters_epoch(b, 0, *p, ["k"]),
+    ),
+    "span_flag_epoch": (
+        "doc_id long, text string", (1, "a b c"), ("s3a://b/grams", "s3a://b/spans"),
+        lambda s, b, p: app.span_flag_epoch(b, 0, *p),
+    ),
+    "drift_epoch": (
+        "x long", (1,), ("s3a://b/drift",),
+        lambda s, b, p: app.drift_epoch(b, 0, *p, F.col("x"), "bucket"),
+    ),
+    "dlq_etl_epoch": (
+        "value string", ("{}",), ("s3a://b/good", "s3a://b/dlq"),
+        lambda s, b, p: app.dlq_etl_epoch(b, 0, *p),
+    ),
+    "snapshot_sink_epoch": (
+        "k long", (1,), ("s3a://b/snap",),
+        lambda s, b, p: app.snapshot_sink_epoch(b, 0, *p, "app"),
+    ),
+    "cms_epoch": (
+        "k string", ("a",), ("s3a://b/cms",),
+        lambda s, b, p: app.cms_epoch(b, 0, *p, "k"),
+    ),
+    "moments_epoch": (
+        "v array<double>", ([1.0, 2.0],), ("s3a://b/moments",),
+        lambda s, b, p: app.moments_epoch(b, 0, *p, "v", 2),
+    ),
+}
 
-    batch = spark.createDataFrame([("a", 1, 1.0)], "k string, ver long, v double")
-    with pytest.raises(ValueError, match="local-filesystem"):
-        app.dim_upsert_epoch(batch, 0, "s3a://bucket/dim", ["k"], "ver")
-    with pytest.raises(ValueError, match="local-filesystem"):
-        app.rollup_merge_epoch(
-            spark.createDataFrame([], "ts timestamp, value double"),
-            0, "hdfs://nn/state",
-        )
-    with pytest.raises(ValueError, match="local-filesystem"):
-        app.ingest_dedup_epoch(
-            spark.createDataFrame([], "doc_id long, text string"),
-            0, "s3a://b/idx", "s3a://b/corpus",
-        )
+#: (epoch, indexes of its remote roots): each root alone, then all of a
+#: multi-root epoch's roots at once.
+_REMOTE_CASES = [
+    pytest.param(name, remote, id=f"{name}-{tag}")
+    for name, (_, _, uris, _) in _ROOTED_EPOCHS.items()
+    for tag, remote in [(str(i), {i}) for i in range(len(uris))]
+    + ([("all", set(range(len(uris))))] if len(uris) > 1 else [])
+]
+
+
+@pytest.mark.parametrize("name,remote", _REMOTE_CASES)
+def test_epoch_sinks_reject_remote_uris(spark, tmp_path, name, remote):
+    """A remote URI in any root argument fails the epoch, on an idle
+    trigger as on a busy one, before any root is touched: a crashed
+    swap's aside beside each local root is still there, unrecovered."""
+    schema, row, uris, call = _ROOTED_EPOCHS[name]
+    paths = [uri if i in remote else str(tmp_path / f"root{i}") for i, uri in enumerate(uris)]
+    asides = [commitproto.aside_dir(p) for i, p in enumerate(paths) if i not in remote]
+    for aside in asides:
+        os.makedirs(aside)
+    for rows in ([], [row]):
+        with pytest.raises(ValueError, match="local-filesystem"):
+            call(spark, spark.createDataFrame(rows, schema), paths)
+    assert sorted(os.listdir(tmp_path)) == sorted(os.path.basename(a) for a in asides)
+
+
+@pytest.mark.parametrize("name", list(_ROOTED_EPOCHS))
+def test_idle_trigger_leaves_every_root_absent(spark, tmp_path, name):
+    """An empty micro-batch writes nothing under any root of any epoch."""
+    schema, _, uris, call = _ROOTED_EPOCHS[name]
+    paths = [str(tmp_path / f"root{i}") for i in range(len(uris))]
+    call(spark, spark.createDataFrame([], schema), paths)
+    assert os.listdir(tmp_path) == []
 
 
 def test_dim_upsert_epoch_releases_its_checkpoint(spark, tmp_path):
