@@ -17,11 +17,14 @@ component pointer TWICE (label(label(label(n)))) — doubling cuts
 chain depth ~4x per round, giving O(log d) rounds on diameter-d
 components instead of O(d) for plain neighbor flooding.
 
-Small graphs: an edge list of at most ``_DRIVER_MAX_EDGES`` rows
-(about 8 MB of Arrow) is collected once and labeled on the driver with
-the same min-label + pointer-jump fixpoint in numpy — one bounded
-collect instead of several scheduled jobs per round. The bound is on
-the edge count alone, never on cores or configuration.
+Small graphs: every operator here (connected components, triangles,
+clustering coefficients, PageRank) cuts its edge projection once and
+hands it to :func:`_collect_bounded`. An edge list of at most
+``_DRIVER_MAX_EDGES`` rows (about 8 MB of Arrow) comes back whole and
+is labeled, counted or ranked on the driver with numpy and pyarrow:
+one bounded collect instead of several scheduled jobs per round or
+join. The bound is on the edge count alone, never on cores or
+configuration; larger graphs run the Spark plans below.
 
 Scale notes (100 TB): above the bound each round is one join+aggregate
 on the node id plus two pointer self-joins, all over the *node/edge*
@@ -39,7 +42,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # DataFrame.unpersist() is a NO-OP for localCheckpoint blocks (they
@@ -91,13 +94,10 @@ def connected_components(
     # and executed twice — measured 2x the whole-query cost at sf0.1.
     # After the checkpoint the collect or the union reads cached blocks.
     e0, e0_ids = checkpoint(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    schema = e0.select(F.col("a").alias("node"), F.col("a").alias("component")).schema
-    # One bounded collect decides the path: a table of at most the
-    # bound is the whole graph, so it is labeled on the driver.
-    small = e0.limit(_DRIVER_MAX_EDGES + 1).toArrow()
-    if small.num_rows <= _DRIVER_MAX_EDGES:
+    small = _collect_bounded(e0)
+    if small is not None:
         release_rdds(spark, e0_ids)
-        return spark.createDataFrame(_driver_components(small), schema)
+        return _local_frame(spark, _driver_components(small))
 
     # Symmetrize, then append one SELF-EDGE (n, n) per node: the
     # per-round neighbor-min over this table sees the node's own
@@ -228,26 +228,66 @@ def connected_components(
     return labels.select("node", F.col("comp").alias("component"))
 
 
-def _driver_components(tbl: pa.Table) -> pa.Table:
-    """Label a collected ``(a, b)`` edge table on the driver.
+def _collect_bounded(frame: DataFrame) -> pa.Table | None:
+    """All of ``frame`` as Arrow when it has at most
+    ``_DRIVER_MAX_EDGES`` rows, else None. One bounded collect decides
+    a graph operator's path: a table within the bound is the whole
+    graph, so the driver can finish it; the ``+ 1`` row is what tells
+    a table at the bound from one above it."""
+    tbl = frame.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    return tbl if tbl.num_rows <= _DRIVER_MAX_EDGES else None
 
-    Non-null ids map to dense indices in sorted order, so index order
-    is id order for longs, strings and decimals alike and the minimum
-    index of a component names its minimum id. Labels start at the
-    own index; each round takes the neighbor minimum in both edge
-    directions (``np.minimum.at``) and then shortcuts every label
-    through its pointer until the labels stop moving. Labels only
-    decrease, so the loop ends; at the fixpoint both ends of every
-    edge agree and every label is its component's minimum index."""
-    a, b = tbl.column("a"), tbl.column("b")
+
+def _local_frame(spark: SparkSession, tbl: pa.Table) -> DataFrame:
+    """A driver-side result as a DataFrame, column types read off the
+    Arrow types (ids keep the type they were collected with).
+
+    A local relation of many small rows is slow to scan, since each row
+    is serialized into its task one by one: 392k three-long rows took
+    about 1 s to reach a noop sink on 4 cores. So the columns travel as
+    one row of arrays per default-parallelism slot, and
+    ``inline(arrays_zip(...))`` unpacks them in the tasks (0.15 s for
+    the same rows)."""
+    k = spark.sparkContext.defaultParallelism
+    offsets = pa.array([tbl.num_rows * i // k for i in range(k + 1)], pa.int32())
+    packed = pa.table({
+        name: pa.ListArray.from_arrays(offsets, col.combine_chunks())
+        for name, col in zip(tbl.column_names, tbl.columns)
+    })
+    return spark.createDataFrame(packed).select(F.inline(F.arrays_zip(*tbl.column_names)))
+
+
+def _dense_edges(tbl: pa.Table) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """Map a collected two-column edge table to dense node indices.
+
+    Returns the distinct non-null ids in sorted order, and the two
+    ends (int64 indices into those ids) of every edge whose ends are
+    both non-null. Index order is id order for longs, strings and
+    decimals alike, so the smallest index names the smallest id and an
+    index comparison is an id comparison."""
+    a, b = tbl.column(0), tbl.column(1)
     ids = pa.chunked_array(a.chunks + b.chunks, type=a.type).drop_null()
     uniq = pc.unique(ids)
     uniq = uniq.take(pc.sort_indices(uniq))
     ia = pc.index_in(a, value_set=uniq)
     ib = pc.index_in(b, value_set=uniq)
     both = pc.and_(pc.is_valid(ia), pc.is_valid(ib))
-    u = ia.filter(both).to_numpy()
-    v = ib.filter(both).to_numpy()
+    u = ia.filter(both).to_numpy().astype(np.int64)
+    v = ib.filter(both).to_numpy().astype(np.int64)
+    return uniq, u, v
+
+
+def _driver_components(tbl: pa.Table) -> pa.Table:
+    """Label a collected ``(a, b)`` edge table on the driver.
+
+    Nodes are the dense indices of :func:`_dense_edges`, so the
+    minimum index of a component names its minimum id. Labels start at
+    the own index; each round takes the neighbor minimum in both edge
+    directions (``np.minimum.at``) and then shortcuts every label
+    through its pointer until the labels stop moving. Labels only
+    decrease, so the loop ends; at the fixpoint both ends of every
+    edge agree and every label is its component's minimum index."""
+    uniq, u, v = _dense_edges(tbl)
     lab = np.arange(len(uniq))
     while True:
         nxt = lab.copy()
@@ -365,21 +405,67 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     near-dup pair/cluster layer (operators/dedup.py, graph.py) with
     the standard triangle primitive used for dup-cluster density and
     social-graph metrics.
+
+    Edge lists within ``_DRIVER_MAX_EDGES`` are counted on the driver
+    with the same orientation (:func:`_driver_triangles`).
     """
-    # Materialize the edge projection EAGERLY: the oriented edge list is
-    # referenced four times below (degree count + three join legs), and
-    # an expensive upstream pair pipeline (e.g. Jaccard candidate
-    # generation) would otherwise be re-executed once per reference —
-    # measured 4x the whole-query cost on the near-dup graph. Same
-    # rationale as connected_components' edge checkpoint above.
-    e0, e0_ids = checkpoint(
+    spark = edges.sparkSession
+    e0, e0_ids = _trio_cut(edges, src, dst)
+    small = _collect_bounded(e0)
+    if small is not None:
+        release_rdds(spark, e0_ids)
+        uniq, lo, hi, deg = _undirected(small)
+        tri = _driver_triangles(lo, hi, deg)
+        return _local_frame(spark, pa.table(
+            {c: uniq.take(pa.array(tri[:, k])) for k, c in enumerate(("id_a", "id_b", "id_c"))}
+        ))
+    und = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+    with_deg = _degree_oriented(und)
+    release_rdds(spark, e0_ids)
+    return _wedge_triangles(with_deg)
+
+
+def _trio_cut(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, set[int]]:
+    """The eager ``(u, v)`` edge cut that triangles, clustering
+    coefficients and PageRank start from. ``u != v`` drops self-loops,
+    and since it is NULL when either end is NULL it drops such an edge
+    whole (connected components instead keeps an edge's non-null end
+    as a node). Materialized EAGERLY: the Spark plans reference the
+    edge list several times, and an expensive upstream pair pipeline
+    (e.g. Jaccard candidate generation) would otherwise be re-executed
+    once per reference — measured 4x the whole-query cost on the
+    near-dup graph. Same rationale as connected_components' edge
+    checkpoint above."""
+    return checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    und = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    with_deg = _degree_oriented(und)
-    release_rdds(edges.sparkSession, e0_ids)
-    return _wedge_triangles(with_deg)
+
+
+def _undirected(tbl: pa.Table) -> tuple[pa.Array, np.ndarray, np.ndarray, np.ndarray]:
+    """A collected :func:`_trio_cut` as a simple undirected graph: the
+    sorted node ids, every undirected edge once as dense indices
+    ``(lo, hi)`` with ``lo < hi`` (reversed and duplicate edges
+    collapse, as the Spark plans' symmetrize-distinct does), and each
+    node's degree."""
+    uniq, u, v = _dense_edges(tbl)
+    n = len(uniq)
+    key = np.unique(np.minimum(u, v) * n + np.maximum(u, v))
+    lo, hi = key // n, key % n
+    return uniq, lo, hi, np.bincount(np.concatenate([lo, hi]), minlength=n)
+
+
+def _driver_triangles(lo: np.ndarray, hi: np.ndarray, deg: np.ndarray) -> np.ndarray:
+    """Every triangle of the undirected graph ``(lo, hi)``, one row of
+    three sorted dense indices each. Edges are degree-oriented as in
+    :func:`_degree_oriented` (low (degree, id) to high; index order is
+    id order), then two pyarrow hash joins find each triangle once:
+    the wedge u->v->w, then its closing edge u->w."""
+    up = deg[lo] <= deg[hi]  # lo < hi, so a degree tie orients by id
+    d = pa.table({"u": np.where(up, lo, hi), "v": np.where(up, hi, lo)})
+    wedges = d.join(d.rename_columns(["v", "w"]), "v", join_type="inner")
+    tri = wedges.join(d.rename_columns(["u", "w"]), ["u", "w"], join_type="left semi")
+    return np.sort(np.column_stack([tri.column(c).to_numpy() for c in "uvw"]), axis=1)
 
 
 def _degree_oriented(und: DataFrame) -> DataFrame:
@@ -434,15 +520,23 @@ def clustering_coefficients(
     joins counts back onto the degree table: one extra shuffle over
     the TRIANGLE list, never the corpus. Nodes on no triangle get 0.0;
     degree-1 nodes have an undefined denominator and report 0.0.
+
+    Edge lists within ``_DRIVER_MAX_EDGES`` are counted on the driver
+    (:func:`_driver_triangles`), and the same coefficient expression
+    then runs over the local ``(node, degree, n_triangles)`` relation.
     """
     # one eager checkpoint serves BOTH the degree table and the
-    # triangle join's references — without it an expensive upstream
-    # pair pipeline would re-execute per consumer (the same hazard
-    # triangles() guards internally; see its comment)
-    e0, e0_ids = checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
+    # triangle join's references (see _trio_cut)
+    spark = edges.sparkSession
+    e0, e0_ids = _trio_cut(edges, src, dst)
+    small = _collect_bounded(e0)
+    if small is not None:
+        release_rdds(spark, e0_ids)
+        uniq, lo, hi, deg = _undirected(small)
+        n_tri = np.bincount(_driver_triangles(lo, hi, deg).ravel(), minlength=len(uniq))
+        return _with_coefficient(_local_frame(
+            spark, pa.table({"node": uniq, "degree": deg, "n_triangles": n_tri})
+        ))
     # Materialize the symmetrized edge list ONCE and share it between
     # the degree table and the orientation (previously this function
     # computed und/deg itself for the coefficient AND called the public
@@ -454,7 +548,7 @@ def clustering_coefficients(
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
     )
-    release_rdds(edges.sparkSession, e0_ids)
+    release_rdds(spark, e0_ids)
     deg = und.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
     tri_nodes = (
         _wedge_triangles(_degree_oriented(und))
@@ -462,23 +556,30 @@ def clustering_coefficients(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    joined = deg.join(tri_nodes, "node", "left").select(
+    return _with_coefficient(deg.join(tri_nodes, "node", "left").select(
         "node",
         "degree",
         F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
+    ))
+
+
+def _with_coefficient(counts: DataFrame) -> DataFrame:
+    """``(node, degree, n_triangles)`` plus ``clustering_coef``, rounded
+    by Spark on both paths so they agree to the last digit."""
+    return counts.select(
+        "node",
+        "degree",
+        "n_triangles",
         F.when(
             F.col("degree") >= 2,
             F.round(
-                F.coalesce(F.col("n_triangles"), F.lit(0))
-                * 2.0
-                / (F.col("degree") * (F.col("degree") - 1)),
+                F.col("n_triangles") * 2.0 / (F.col("degree") * (F.col("degree") - 1)),
                 4,
             ),
         )
         .otherwise(F.lit(0.0))
         .alias("clustering_coef"),
     )
-    return joined
 
 
 def pagerank(
@@ -508,11 +609,24 @@ def pagerank(
     Nodes are the graph's vertices (isolated docs never enter the
     edge list); undirected edges contribute in both directions, so
     there are no dangling nodes and total rank mass stays 1.
+
+    Edge lists within ``_DRIVER_MAX_EDGES`` (the empty one always) are
+    ranked on the driver by the same iteration in numpy, one
+    ``np.bincount`` per round.
     """
-    e0, e0_ids = checkpoint(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
+    spark = edges.sparkSession
+    e0, e0_ids = _trio_cut(edges, src, dst)
+    small = _collect_bounded(e0)
+    if small is not None:
+        release_rdds(spark, e0_ids)
+        uniq, lo, hi, deg = _undirected(small)
+        u, v = np.concatenate([lo, hi]), np.concatenate([hi, lo])
+        n = max(len(uniq), 1)  # an empty graph has no rank to divide
+        rank = np.full(len(uniq), 1.0 / n)
+        for _ in range(iterations):
+            c = np.bincount(v, weights=rank[u] / deg[u], minlength=len(uniq))
+            rank = (1.0 - damping) / n + damping * c
+        return _local_frame(spark, pa.table({"node": uniq, "rank": rank}))
     und = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
     edges_deg, _ = checkpoint(und.join(deg, "u"))
@@ -520,11 +634,9 @@ def pagerank(
     # weight afterwards — release them (via the block-manager registry;
     # DataFrame.unpersist() is a no-op for checkpoint blocks) so
     # repeated pagerank calls don't accumulate checkpoint storage.
-    release_rdds(edges.sparkSession, e0_ids)
+    release_rdds(spark, e0_ids)
     nodes = edges_deg.select(F.col("u").alias("node")).distinct()
     n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
     for _ in range(iterations):

@@ -313,9 +313,11 @@ def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the df-capped shingle universe): doc triples where all three
     pairwise similarities clear the threshold — the density signal
     that separates true duplicate cliques from chance shingle
-    collisions. Spark side is the degree-oriented wedge join
-    (operators/graph.triangles, O(m^1.5) candidates bound); the pair
-    generation itself is the capped inverted-index plan, never O(n²)."""
+    collisions. operators/graph.triangles counts a pair table within
+    its edge bound on the driver and a larger one with the
+    degree-oriented wedge join (O(m^1.5) candidates bound), the same
+    orientation on both paths; the pair generation itself is the
+    capped inverted-index plan, never O(n²)."""
     pairs = _neardup_pairs_cached(spark, sf_dir)
     return graph.triangles(pairs, src="id_a", dst="id_b")
 

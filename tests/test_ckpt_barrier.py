@@ -9,10 +9,6 @@ from pyspark.sql import functions as F
 from pubg_data_pipeline_spark.operators import ckpt
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def _key(spark, site):
     return (spark.sparkContext.applicationId, site)
 
@@ -21,13 +17,15 @@ def test_barrier_releases_superseded_site_blocks(spark):
     """Repeated executions of one query (the bench runs each 4+ times)
     must keep exactly ONE live copy per barrier site, not accumulate a
     corpus-scale checkpoint per call — DataFrame.unpersist() cannot
-    release these blocks, only the site registry can."""
+    release these blocks, only the site registry can. Ids, not counts:
+    the context cleaner freeing RDDs that earlier tests left behind
+    would otherwise hide a leak or fake one."""
     df = spark.range(1000).select(F.col("id"), (F.col("id") % 7).alias("k"))
-    before = _n_persistent(spark)
+    before = ckpt.persisted_rdd_ids(spark)
     for _ in range(4):
         out = ckpt.barrier(df.groupBy("k").count(), site="test:release")
         out.write.format("noop").mode("overwrite").save()  # materialize
-    growth = _n_persistent(spark) - before
+    growth = len(ckpt.persisted_rdd_ids(spark) - before)
     assert growth <= 1, f"leaked {growth} checkpoint RDDs over 4 calls"
     # cleanup the final live copy so other tests see a clean registry
     ckpt.release_rdds(spark, ckpt._SITE_BLOCKS.pop(_key(spark, "test:release"), set()))

@@ -1,16 +1,20 @@
-"""Connected-components operator: planted structure, chain diameter
-(pointer-jump convergence), and cluster-dedup policy.
+"""Graph operators: connected components (planted structure, chain
+diameter, cluster-dedup policy), triangles, clustering coefficients
+and PageRank.
 
-Every CC shape runs on both paths: the driver labeling of small edge
-lists and the distributed loop (forced by a bound of 0), which must
-agree row for row."""
+Every shape runs on both paths: the driver path of small edge lists
+and the Spark path (forced by a bound of 0), which must agree row for
+row."""
 
 from __future__ import annotations
+
+import ast
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from pubg_data_pipeline_spark.operators import graph
+from pubg_data_pipeline_spark.operators import ckpt, graph
 
 
 def _components(edges, bound=None):
@@ -32,6 +36,39 @@ def _cc(spark, edge_tuples, schema="src long, dst long"):
     driver = _components(edges)
     assert _components(edges, bound=0) == driver
     return driver
+
+
+def _rows(op, edges, bound=None, **kw):
+    """Column types and sorted rows of ``op(edges, **kw)`` with the
+    driver bound set to ``bound`` (None keeps the module's own)."""
+    with pytest.MonkeyPatch.context() as mp:
+        if bound is not None:
+            mp.setattr(graph, "_DRIVER_MAX_EDGES", bound)
+        out = op(edges, **kw)
+        return out.dtypes, sorted(tuple(r) for r in out.collect())
+
+
+def _assert_same(got, want):
+    """Two ``_rows`` results agree: equal column types, ids and counts
+    exactly, floats (PageRank's sums, added in another order on the
+    two paths) within 1e-12."""
+    assert got[0] == want[0]
+    assert len(got[1]) == len(want[1])
+    for g, w in zip(got[1], want[1]):
+        for x, y in zip(g, w, strict=True):
+            if isinstance(x, float):
+                assert abs(x - y) < 1e-12, (g, w)
+            else:
+                assert x == y, (g, w)
+
+
+def _both_paths(spark, op, edge_tuples, schema="src long, dst long", **kw):
+    """The driver path's sorted rows of ``op``, after checking that the
+    Spark path (bound 0) gives the same."""
+    edges = spark.createDataFrame(edge_tuples, schema)
+    driver = _rows(op, edges, **kw)
+    _assert_same(driver, _rows(op, edges, bound=0, **kw))
+    return driver[1]
 
 
 def test_two_components(spark):
@@ -104,22 +141,17 @@ def test_dedup_clusters_and_corpus(spark):
 def test_triangles_basic_shapes(spark):
     # K4 on {1,2,3,4} has exactly 4 triangles; the pendant edge (4,5)
     # and disconnected edge (10,11) add none.
-    edges = spark.createDataFrame(
+    tris = _both_paths(
+        spark,
+        graph.triangles,
         [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (10, 11)],
-        "src long, dst long",
-    )
-    tris = sorted(
-        (r["id_a"], r["id_b"], r["id_c"]) for r in graph.triangles(edges).collect()
     )
     assert tris == [(1, 2, 3), (1, 2, 4), (1, 3, 4), (2, 3, 4)]
 
 
 def test_triangles_input_orientation_irrelevant(spark):
     # reversed / duplicated / self-loop edges collapse to the same set
-    edges = spark.createDataFrame(
-        [(2, 1), (1, 2), (3, 1), (2, 3), (3, 3)], "src long, dst long"
-    )
-    tris = [(r["id_a"], r["id_b"], r["id_c"]) for r in graph.triangles(edges).collect()]
+    tris = _both_paths(spark, graph.triangles, [(2, 1), (1, 2), (3, 1), (2, 3), (3, 3)])
     assert tris == [(1, 2, 3)]
 
 
@@ -127,18 +159,18 @@ def test_triangles_star_has_none(spark):
     # a degree-skewed hub with no closing edges: the degree-oriented
     # wedge join generates zero candidates (every edge points INTO the
     # hub, so the hub has no out-wedges) — the skew property under test.
-    hub = spark.createDataFrame([(0, i) for i in range(1, 30)], "src long, dst long")
-    assert graph.triangles(hub).count() == 0
+    assert _both_paths(spark, graph.triangles, [(0, i) for i in range(1, 30)]) == []
 
 
 def test_clustering_coefficients(spark):
     # triangle {1,2,3} + pendant 4 off node 3, isolated edge (10,11)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (10, 11)], "src long, dst long"
-    )
     rows = {
-        r["node"]: (r["degree"], r["n_triangles"], r["clustering_coef"])
-        for r in graph.clustering_coefficients(edges).collect()
+        node: (degree, n_triangles, coef)
+        for node, degree, n_triangles, coef in _both_paths(
+            spark,
+            graph.clustering_coefficients,
+            [(1, 2), (2, 3), (1, 3), (3, 4), (10, 11)],
+        )
     }
     assert rows[1] == (2, 1, 1.0)       # both neighbors connected
     assert rows[2] == (2, 1, 1.0)
@@ -185,12 +217,9 @@ def test_init_fixpoint_component_mixed_with_live_chain(spark):
 
 
 def test_pagerank_invariants_star_and_symmetry(spark):
-    from pubg_data_pipeline_spark.operators import graph
-
     # star: hub 0 connected to 1..5, plus a symmetric pair (10, 11)
     edges = [(0, i) for i in range(1, 6)] + [(10, 11)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    ranks = {r["node"]: r["rank"] for r in graph.pagerank(df).collect()}
+    ranks = dict(_both_paths(spark, graph.pagerank, edges))
     # mass conservation over the 8 graph nodes
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     # hub outranks every leaf; leaves are symmetric-equal
@@ -202,10 +231,7 @@ def test_pagerank_invariants_star_and_symmetry(spark):
 
 
 def test_pagerank_empty_graph(spark):
-    from pubg_data_pipeline_spark.operators import graph
-
-    df = spark.createDataFrame([], "src long, dst long")
-    assert graph.pagerank(df).count() == 0
+    assert _both_paths(spark, graph.pagerank, []) == []
 
 
 def test_pagerank_matches_reference_on_path_graph(spark):
@@ -216,11 +242,8 @@ def test_pagerank_matches_reference_on_path_graph(spark):
     A path graph exercises degree-1 endpoints — the nodes that would
     silently vanish if coverage ever broke — and values are checked
     against a pure-Python reference walker."""
-    from pubg_data_pipeline_spark.operators import graph
-
     edges = [(1, 2), (2, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in graph.pagerank(df, iterations=5).collect()}
+    got = dict(_both_paths(spark, graph.pagerank, edges, iterations=5))
 
     und = set()
     for a, b in edges:
@@ -350,12 +373,144 @@ def test_cc_writes_no_session_conf(spark, monkeypatch):
 
 def test_repeated_cc_calls_leave_no_cached_blocks(spark):
     """Per-round checkpoints must be released: repeated calls in one
-    session must not accumulate storage (the bench runs queries 4x)."""
-    sc = spark.sparkContext._jsc.sc()
-    before = sc.getPersistentRDDs().size()
+    session must not accumulate storage (the bench runs queries 4x).
+    Ids, not counts: the context cleaner freeing RDDs that earlier
+    tests left behind would otherwise hide a leak or fake one."""
+    before = ckpt.persisted_rdd_ids(spark)
     for _ in range(2):
         _cc(spark, [(i, i + 1) for i in range(20)])
-    after = sc.getPersistentRDDs().size()
-    # the final labels frame of each call stays alive (it IS the
+    new = ckpt.persisted_rdd_ids(spark) - before
+    # the final labels frame of each loop call stays alive (it IS the
     # result); everything intermediate must be gone
-    assert after - before <= 2, f"leaked {after - before} cached RDDs"
+    assert len(new) <= 2, f"leaked {len(new)} cached RDDs"
+
+
+TRIO = (graph.triangles, graph.clustering_coefficients, graph.pagerank)
+TRIO_IDS = ("triangles", "clustering", "pagerank")
+
+
+def test_random_graph_triangles_match_enumeration(spark):
+    """Both paths on a seeded random graph (ids unrelated to edge
+    order, reversed duplicates and self-loops included) against a
+    pure-Python enumeration of triangles and per-node counts."""
+    import itertools
+    import random
+
+    rng = random.Random(11)
+    ids = rng.sample(range(10**6), 40)
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(260)]
+    adj = {n: set() for n in ids}
+    for a, b in edges:
+        if a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    want = sorted(
+        t for t in itertools.combinations(sorted(ids), 3)
+        if t[1] in adj[t[0]] and t[2] in adj[t[0]] and t[2] in adj[t[1]]
+    )
+    assert want, "the seed should plant triangles"
+    assert _both_paths(spark, graph.triangles, edges) == want
+    per_node = {n: sum(n in t for t in want) for n in ids if adj[n]}
+    coef = _both_paths(spark, graph.clustering_coefficients, edges)
+    assert {node: (deg, n_tri) for node, deg, n_tri, _ in coef} == {
+        n: (len(adj[n]), per_node[n]) for n in per_node
+    }
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_string_ids(spark, op):
+    """String ids keep their type and their order on both paths."""
+    edges = [("b", "a"), ("a", "c"), ("c", "b"), ("c", "d")]
+    rows = _both_paths(spark, op, edges, "src string, dst string")
+    if op is graph.triangles:
+        assert rows == [("a", "b", "c")]
+    else:
+        assert [r[0] for r in rows] == ["a", "b", "c", "d"]
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_null_endpoints_drop_the_edge(spark, op):
+    """Unlike connected components, the trio drops an edge with a NULL
+    end whole: its non-null end is no node unless another edge adds it."""
+    rows = _both_paths(spark, op, [(1, 2), (2, 3), (3, 1), (None, 7), (8, None), (None, None)])
+    if op is graph.triangles:
+        assert rows == [(1, 2, 3)]
+    else:
+        assert [r[0] for r in rows] == [1, 2, 3]
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_empty_graph(spark, op):
+    assert _both_paths(spark, op, []) == []
+    assert _both_paths(spark, op, [(4, 4), (None, 5)]) == []
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_driver_bound_boundary(spark, monkeypatch, op):
+    """With the bound at N, an N-edge cut is counted on the driver and
+    an (N+1)-edge cut runs on Spark; self-loops are not in the cut."""
+    calls = []
+    dense = graph._dense_edges
+
+    def counting(tbl):
+        calls.append(tbl.num_rows)
+        return dense(tbl)
+
+    monkeypatch.setattr(graph, "_dense_edges", counting)
+    n = 6
+    at = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (9, 9)], "src long, dst long"
+    )
+    over = at.union(spark.createDataFrame([(6, 7)], "src long, dst long"))
+    driver = _rows(op, at, bound=n)
+    assert calls == [n]
+    _assert_same(driver, _rows(op, at, bound=0))
+    on_spark = _rows(op, over, bound=n)
+    assert calls == [n]
+    _assert_same(_rows(op, over, bound=n + 1), on_spark)
+    assert calls == [n, n + 1]
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_driver_path_job_count(spark, op):
+    """Pin: on a small graph each metric runs the edge cut and the one
+    bounded collect — at most 2 Spark jobs, none per join or round."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i, j) for i in range(8) for j in range(i + 1, 8)], "src long, dst long"
+    )
+    group = f"test_graph:trio_driver_jobs:{op.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        out = op(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, f"driver path started {len(jobs)} jobs"
+    assert out.count() > 0
+
+
+@pytest.mark.parametrize("op", TRIO, ids=TRIO_IDS)
+def test_trio_driver_path_leaves_no_cached_rdds(spark, op):
+    """The driver path releases its edge cut: nothing it registered
+    with the block manager outlives the call."""
+    before = ckpt.persisted_rdd_ids(spark)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
+    assert op(edges).count() > 0
+    assert ckpt.persisted_rdd_ids(spark) - before == set()
+
+
+def test_one_bounded_collect_site():
+    """Every graph operator reaches the driver through _collect_bounded,
+    the only Arrow collect in operators/graph.py."""
+    path = os.path.join(os.path.dirname(graph.__file__), "graph.py")
+    with open(path, encoding="utf-8") as f:
+        src = f.read()
+    assert src.count(".toArrow(") == 1
+    owners = [
+        node.name
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+        and ".toArrow(" in ast.get_source_segment(src, node)
+    ]
+    assert owners == ["_collect_bounded"]
